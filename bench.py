@@ -62,7 +62,10 @@ def _consume(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # default: the CPUs this process may run on, not a fixed 32 that
+    # oversubscribes a small host
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -394,29 +394,30 @@ def compile_predicate(schema: Any, value: Column, dtype: DataType,
 
 
 def _type_predicate(arg: Any, value: Column, dtype: DataType,
-                    ctx: CompileContext, _depth: int) -> Column:
-    """Membership predicate for a type name / union-with-inline-schemas."""
+                    ctx: CompileContext, _depth: int) -> Optional[Column]:
+    """Membership predicate for a type name / union-with-inline-schemas,
+    or None when the dtype statically satisfies a member: an absent
+    value passes and a present one matches, so the runtime form would
+    be ``isnull(v) OR isnotnull(v)`` — a tautology Catalyst does not
+    fold, paid per element inside array lambdas."""
     members = arg if isinstance(arg, list) else [arg]
+    # a member that is neither a name nor a schema accepts (jesse parity)
+    if any(not isinstance(m, (dict, str))
+           or isinstance(m, str) and _static_type_match(m, dtype)
+           for m in members):
+        return None
     out: Optional[Column] = None
     for member in members:
-        if isinstance(member, dict):
-            if ctx.draft == E.DRAFT3:
-                m = compile_predicate(member, value, dtype, ctx, _depth + 1)
-            else:
-                continue  # draft4 type members are names only
-        elif isinstance(member, str):
-            static = _static_type_match(member, dtype)
-            if static is None:  # "null"
-                m = value.isNull()
-            elif static:
-                m = value.isNotNull()
-            else:
-                m = F.lit(False)
+        if isinstance(member, str):
+            # statically impossible, or "null" (runtime-dependent)
+            m = value.isNull() if member == "null" else F.lit(False)
+        elif ctx.draft == E.DRAFT3:
+            m = compile_predicate(member, value, dtype, ctx, _depth + 1)
         else:
-            m = _true()
+            continue  # draft4 type members are names only
         out = m if out is None else (out | m)
     if out is None:
-        return _true()
+        return None
     # absent values pass the type check (required handles presence)
     return value.isNull() | F.coalesce(out, F.lit(False))
 
@@ -450,7 +451,11 @@ def _keyword_predicate(kw: str, arg: Any, schema: dict, value: Column,
     if kw == "minLength" and isinstance(dtype, StringType):
         return _ns(F.length(value) >= F.lit(arg))
     if kw == "maxLength" and isinstance(dtype, StringType):
-        return _ns(F.length(value) <= F.lit(arg))
+        # exact: a UTF-8 string never has more characters than bytes.
+        # The byte count is O(1); length() walks every character, and
+        # runs only when the byte count fails
+        return _ns((F.octet_length(value) <= F.lit(arg))
+                   | (F.length(value) <= F.lit(arg)))
     if kw == "pattern" and isinstance(dtype, StringType):
         return _pattern_predicate(arg, value, ctx)
 
@@ -519,9 +524,10 @@ def _keyword_predicate(kw: str, arg: Any, schema: dict, value: Column,
                         F.lit(True))
 
     if kw == "disallow" and draft3:
-        return value.isNull() | \
-            ~F.coalesce(_type_predicate(arg, value, dtype, ctx, _depth),
-                        F.lit(True))
+        allowed = _type_predicate(arg, value, dtype, ctx, _depth)
+        if allowed is None:  # every present value has a disallowed type
+            return value.isNull()
+        return value.isNull() | ~F.coalesce(allowed, F.lit(True))
 
     if kw == "extends" and draft3:
         subs = arg if isinstance(arg, list) else [arg]
@@ -977,15 +983,28 @@ def _row_gate(root: dict, struct_type: StructType,
     return gate
 
 
-def _atom_for(kw: str) -> str:
-    return {
-        "anyOf": E.ANY_SCHEMAS_NOT_VALID,
-        "oneOf": E.NOT_ONE_SCHEMA_VALID,
-        "not": E.NOT_SCHEMA_VALID,
-        "disallow": E.NOT_ALLOWED,
-        "minProperties": E.WRONG_SIZE,
-        "maxProperties": E.WRONG_SIZE,
-    }.get(kw, E.WRONG_TYPE)
+# keywords whose violation is one row when ``_keyword_predicate`` fails
+# (the predicate also carries each keyword's dtype/draft applicability)
+_SCALAR_ATOMS = {
+    "type": E.WRONG_TYPE,
+    "enum": E.NOT_IN_RANGE,
+    "minimum": E.NOT_IN_RANGE,
+    "maximum": E.NOT_IN_RANGE,
+    "divisibleBy": E.NOT_DIVISIBLE,
+    "multipleOf": E.NOT_DIVISIBLE,
+    "minLength": E.WRONG_LENGTH,
+    "maxLength": E.WRONG_LENGTH,
+    "pattern": E.NO_MATCH,
+    "minItems": E.WRONG_SIZE,
+    "maxItems": E.WRONG_SIZE,
+    "uniqueItems": E.NOT_UNIQUE,
+    "minProperties": E.WRONG_SIZE,
+    "maxProperties": E.WRONG_SIZE,
+    "anyOf": E.ANY_SCHEMAS_NOT_VALID,
+    "oneOf": E.NOT_ONE_SCHEMA_VALID,
+    "not": E.NOT_SCHEMA_VALID,
+    "disallow": E.NOT_ALLOWED,
+}
 
 
 def _compile_checks(schema: dict, value: Column, dtype: DataType,
@@ -1013,32 +1032,11 @@ def _compile_checks(schema: dict, value: Column, dtype: DataType,
     for kw, arg in schema.items():
         if kw in skip:
             continue
-        if kw == "type":
-            add(kw, E.WRONG_TYPE,
-                _type_predicate(arg, value, dtype, ctx, depth))
-        elif kw == "enum" and isinstance(arg, list):
-            add(kw, E.NOT_IN_RANGE,
-                _enum_predicate(arg, value, dtype, ctx.draft))
-        elif kw in ("minimum", "maximum") and _is_numeric(dtype):
-            add(kw, E.NOT_IN_RANGE,
-                _keyword_predicate(kw, arg, schema, value, dtype, ctx, depth))
-        elif kw == "divisibleBy" and draft3 and _is_numeric(dtype):
-            add(kw, E.NOT_DIVISIBLE, _ns(_divisible_exact(value, arg)))
-        elif kw == "multipleOf" and not draft3 and _is_numeric(dtype):
-            add(kw, E.NOT_DIVISIBLE, _ns(_multiple_of(value, arg)))
-        elif kw == "minLength" and isinstance(dtype, StringType):
-            add(kw, E.WRONG_LENGTH, _ns(F.length(value) >= F.lit(arg)))
-        elif kw == "maxLength" and isinstance(dtype, StringType):
-            add(kw, E.WRONG_LENGTH, _ns(F.length(value) <= F.lit(arg)))
-        elif kw == "pattern" and isinstance(dtype, StringType):
-            add(kw, E.NO_MATCH, _pattern_predicate(arg, value, ctx))
-        elif kw == "minItems" and isinstance(dtype, ArrayType):
-            add(kw, E.WRONG_SIZE, _ns(F.size(value) >= F.lit(arg)))
-        elif kw == "maxItems" and isinstance(dtype, ArrayType):
-            add(kw, E.WRONG_SIZE, _ns(F.size(value) <= F.lit(arg)))
-        elif kw == "uniqueItems" and arg is True and isinstance(dtype, ArrayType):
-            add(kw, E.NOT_UNIQUE,
-                _ns(F.size(F.array_distinct(value)) == F.size(value)))
+        if kw in _SCALAR_ATOMS:
+            # one violation when the keyword's predicate fails
+            p = _keyword_predicate(kw, arg, schema, value, dtype, ctx, depth)
+            if p is not None:
+                add(kw, _SCALAR_ATOMS[kw], p)
         elif kw == "items" and isinstance(dtype, ArrayType) \
                 and isinstance(arg, dict):
             arrays.append(_items_violations(arg, value, dtype, path,
@@ -1271,14 +1269,6 @@ def _compile_checks(schema: dict, value: Column, dtype: DataType,
                                        sptr + f"/allOf/{i}", ctx, depth + 1)
                 scalars.extend(s)
                 arrays.extend(a)
-        elif kw in ("anyOf", "oneOf", "not", "disallow",
-                    "minProperties", "maxProperties"):
-            p = _keyword_predicate(kw, arg, schema, value, dtype, ctx, depth)
-            if p is not None:
-                kind_atom = _atom_for(kw)
-                scalars.append(F.when(~F.coalesce(p, F.lit(True)),
-                                      _viol(kind_atom, path, sptr + "/" + kw,
-                                            vj)))
         # format and unknown keywords: vacuous
     return scalars, arrays
 
@@ -1381,13 +1371,6 @@ def _items_violations(item_schema: dict, value: Column, dtype: ArrayType,
     # allocation from the valid-data hot path — validation becomes
     # compute-bound instead of GC-bound, which is what lets throughput
     # scale with cores.
-    try:
-        gate_schema: Optional[dict] = item_schema
-        _ = compile_predicate(item_schema, F.lit(None), elem_type, lctx,
-                              depth + 1)
-    except CompileError:
-        gate_schema = None
-
     def per_element(x: Column, i: Column) -> Column:
         elem_path = F.concat(path, F.lit("/"),
                              (i + F.lit(index_offset)).cast("string"))
@@ -1400,11 +1383,11 @@ def _items_violations(item_schema: dict, value: Column, dtype: ArrayType,
         if not parts:
             return _empty_violations()
         built = parts[0] if len(parts) == 1 else F.concat(*parts)
-        if gate_schema is None:
-            return built
-        ok = F.coalesce(
-            compile_predicate(gate_schema, x, elem_type, lctx, depth + 1),
-            F.lit(True))
+        try:
+            ok = F.coalesce(compile_predicate(item_schema, x, elem_type,
+                                              lctx, depth + 1), F.lit(True))
+        except CompileError:
+            return built  # no gate: every element builds its array
         return F.when(ok, _empty_violations()).otherwise(built)
 
     nested = F.transform(value, per_element)

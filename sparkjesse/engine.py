@@ -29,19 +29,21 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import errors as E
-from .compiler import CompileError, compile_plan
+from .compiler import CompileError, CompiledPlan, compile_plan
 
 # Compiled-plan cache. Building the validator Column tree costs
 # thousands of py4j round trips (~2s driver wall for the flagship
 # schema — measured round 4); the tree itself is a pure function of
-# (schema, input struct, draft, registry state) and its Columns are
+# (schema, input struct, draft, registry content) and its Columns are
 # unbound, so it is reusable across DataFrames within one Spark app.
 # Keyed by applicationId so a restarted JVM can never serve stale
-# gateway objects; registry._rev invalidates on $ref-target changes.
-# Hot paths that win: streaming micro-batches, per-partition resume
-# jobs, and any caller validating many tables against one schema.
-# "KERNEL" caches the vetted-subset rejection so fallback schemas
-# skip straight to the Python kernel on every revalidation.
+# gateway objects, and by the registry's content fingerprint so a new
+# engine over an equal registry hits while one whose $ref targets
+# differ misses. Hot paths that win: streaming micro-batches,
+# per-partition resume jobs, and any caller validating many tables
+# against one schema. A cached CompileError records the vetted-subset
+# rejection so fallback schemas skip straight to the Python kernel on
+# every revalidation.
 _PLAN_CACHE: dict = {}
 _PLAN_CACHE_MAX = 64
 from .pyvalidator import validate_value
@@ -211,22 +213,8 @@ class ValidationEngine:
         kernel over ``to_json`` — same outputs, slower path."""
         schema = self._resolve(schema_or_key)
         draft = E.normalize_draft(draft) if draft else self._draft_of(schema)
-        cache_key = (
-            df.sparkSession.sparkContext.applicationId, draft,
-            json.dumps(schema, sort_keys=True, default=str),
-            df.schema.json(),
-            id(self.registry), getattr(self.registry, "_rev", 0))
-        plan = _PLAN_CACHE.get(cache_key)
-        if plan is None:
-            try:
-                plan = compile_plan(schema, df.schema, draft=draft,
-                                    registry=self.registry)
-            except CompileError:
-                plan = "KERNEL"
-            if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-            _PLAN_CACHE[cache_key] = plan
-        if plan == "KERNEL":
+        plan = self._plan(df, schema, draft)
+        if isinstance(plan, CompileError):
             return self._validate_via_kernel(
                 df, schema, doc_id_col=doc_id_col, draft=draft,
                 max_violations_per_doc=max_violations_per_doc,
@@ -275,18 +263,9 @@ class ValidationEngine:
             draft = drafts.get(name)
             draft = E.normalize_draft(draft) if draft \
                 else self._draft_of(schema)
-            cache_key = (
-                df.sparkSession.sparkContext.applicationId, draft,
-                json.dumps(schema, sort_keys=True, default=str),
-                df.schema.json(),
-                id(self.registry), getattr(self.registry, "_rev", 0))
-            plan = _PLAN_CACHE.get(cache_key)
-            if plan is None or plan == "KERNEL":
-                plan = compile_plan(schema, df.schema, draft=draft,
-                                    registry=self.registry)
-                if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-                    _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-                _PLAN_CACHE[cache_key] = plan
+            plan = self._plan(df, schema, draft)
+            if isinstance(plan, CompileError):
+                raise CompileError(*plan.args)
             viol = plan.violations_column()
             if keep_violations:
                 out = out.withColumn(f"{name}_violations", viol)
@@ -296,6 +275,26 @@ class ValidationEngine:
             else:
                 out = out.withColumn(f"{name}_valid", F.size(viol) == 0)
         return out
+
+    def _plan(self, df: DataFrame, schema: dict,
+              draft: str) -> Union[CompiledPlan, CompileError]:
+        """The compiled plan for ``schema`` over ``df``'s columns, or the
+        CompileError that routes it to the Python kernel — both cached
+        (see ``_PLAN_CACHE``)."""
+        key = (df.sparkSession.sparkContext.applicationId, draft,
+               json.dumps(schema, sort_keys=True, default=str),
+               df.schema.json(), self.registry.fingerprint())
+        plan = _PLAN_CACHE.get(key)
+        if plan is None:
+            try:
+                plan = compile_plan(schema, df.schema, draft=draft,
+                                    registry=self.registry)
+            except CompileError as exc:
+                plan = CompileError(*exc.args)  # no traceback to pin
+            if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
+                _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
+            _PLAN_CACHE[key] = plan
+        return plan
 
     def _validate_via_kernel(self, df: DataFrame, schema: dict, *,
                              doc_id_col: str, draft: str,

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -36,10 +36,12 @@ def detect_hot_keys(df: DataFrame, key: str, *, sample_fraction: float = 0.05,
                     seed: int = 7) -> SkewReport:
     """Sample the key column and flag keys holding more than ``hot_share``
     of the sampled mass. One small job over a sampled projection — the
-    full table is never shuffled for detection (and no ``limit``, which
-    would funnel the sample through a single task). The default
-    ``hot_share`` is 0.2%: at 10^12 rows a 0.2% key is 2×10^9 rows in
-    one hash partition — far past straggler territory.
+    full table is never shuffled for detection, the sample is drawn and
+    shuffled once, and only the top 100 keys reach the driver (no
+    ``limit`` on the sample itself, which would funnel it through a
+    single task). The default ``hot_share`` is 0.2%: at 10^12 rows a
+    0.2% key is 2×10^9 rows in one hash partition — far past straggler
+    territory.
 
     ``target_rows`` (opt-in) caps the expected sample size by shrinking
     the fraction from a ``df.count()``: pass it ONLY when the count is
@@ -56,15 +58,20 @@ def detect_hot_keys(df: DataFrame, key: str, *, sample_fraction: float = 0.05,
                                       max(target_rows / n, 1e-6))
         except Exception:
             pass
-    sample = df.select(key).sample(fraction=sample_fraction, seed=seed)
-    counts = sample.groupBy(key).count()
-    rows = counts.agg(F.sum("count")).collect()[0][0] or 0
+    # one job: the top keys come from the collect, the sampled-row
+    # total from an observation on the same scan; the threshold needs
+    # both, so it is applied here rather than in the query
+    sampled = Observation()
+    sample = (df.select(key).sample(fraction=sample_fraction, seed=seed)
+                .observe(sampled, F.count(F.lit(1)).alias("rows")))
+    top = (sample.groupBy(key).count()
+                 .orderBy(F.desc("count")).limit(100).collect())
+    rows = sampled.get["rows"] if top else 0
     if rows == 0:
         return SkewReport(0, [], hot_share)
     thresh = max(2.0, rows * hot_share)
-    hot = (counts.where(F.col("count") >= thresh)
-                 .orderBy(F.desc("count")).limit(100).collect())
-    return SkewReport(rows, [(r[key], r["count"]) for r in hot], hot_share)
+    return SkewReport(rows, [(r[key], r["count"]) for r in top
+                             if r["count"] >= thresh], hot_share)
 
 
 def salt_column(df: DataFrame, key: str, skew: SkewReport, *,

@@ -15,6 +15,7 @@ back (SURVEY.md §3.4).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from typing import Any, Callable, Optional
@@ -26,9 +27,9 @@ class SchemaRegistry:
     def __init__(self) -> None:
         self._schemas: dict[str, Any] = {}
         self._mtimes: dict[str, float] = {}  # source file → mtime
-        # mutation counter — lets the engine's compiled-plan cache
-        # invalidate when $ref targets change (engine.py _PLAN_CACHE)
+        # mutation counter; ``fingerprint`` recomputes only when it moves
         self._rev: int = 0
+        self._fingerprint: tuple[int, str] = (-1, "")
 
     def add(self, key: str, schema: Any) -> None:
         """Upsert. ``schema`` may be a dict or a JSON string."""
@@ -48,6 +49,18 @@ class SchemaRegistry:
     def delete(self, key: str) -> None:
         self._schemas.pop(key, None)
         self._rev += 1
+
+    def fingerprint(self) -> str:
+        """Hash of every registered schema. Part of the engine's
+        compiled-plan key (engine.py ``_PLAN_CACHE``): equal registries
+        share plans, and a registry whose ``$ref`` targets differ never
+        gets a plan compiled against another's."""
+        rev, fp = self._fingerprint
+        if rev != self._rev:
+            blob = json.dumps(self._schemas, sort_keys=True, default=str)
+            fp = hashlib.sha256(blob.encode()).hexdigest()
+            self._fingerprint = (self._rev, fp)
+        return fp
 
     def __contains__(self, key: str) -> bool:
         return key in self._schemas

@@ -187,3 +187,30 @@ def test_summary_per_partition(docs_df):
         F.sum("fail").alias("f")).collect()[0]
     assert (total["d"], total["p"], total["f"]) == (4, 2, 2)
     assert res.totals() == {"docs": 4, "pass": 2, "fail": 2}
+
+
+@pytest.mark.parametrize("ch", ["a", "é", "€", "😀"])  # 1-4 UTF-8 bytes
+@pytest.mark.parametrize("draft", [E.DRAFT3, E.DRAFT4])
+def test_max_length_counts_characters_not_bytes(spark, ch, draft):
+    """``maxLength`` compiles to ``octet_length <= n OR length <= n``.
+    With multibyte characters a string of n or n+1 characters has more
+    than n bytes, so the character count decides; typed-path verdicts
+    and violations must equal the kernel's, including NULL and ''."""
+    n = 4
+    schema = {"type": "object",
+              "properties": {"s": {"type": "string", "maxLength": n}}}
+    values = {1: ch * n, 2: ch * (n + 1), 3: None, 4: "",
+              5: "a" * (n - 1) + ch, 6: ch + "a" * n}
+    df = spark.createDataFrame(list(values.items()),
+                               "doc_id long, s string")
+    eng = ValidationEngine(default_draft=draft)
+    res = eng.validate(df, schema, draft=draft)
+    got = {r["doc_id"]: (r["valid"], sorted(
+        (v["error_type"], v["path"]) for v in r["violations"]))
+        for r in res.annotated.collect()}
+    for doc_id, s in values.items():
+        doc = {} if s is None else {"s": s}
+        errs = eng.validate_value(schema, doc, default_draft=draft)
+        assert got[doc_id] == (not errs, sorted(
+            (e.error_type, e.path) for e in errs)), (doc_id, s)
+    assert [d for d, (ok, _) in sorted(got.items()) if not ok] == [2, 6]

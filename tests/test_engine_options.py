@@ -480,6 +480,41 @@ def test_plan_cache_reuses_and_invalidates(spark, monkeypatch):
     assert calls["n"] == n_first + 1  # invalidated, recompiled once
 
 
+def test_plan_cache_keyed_on_registry_content(spark, monkeypatch):
+    """The cache key holds the registry's content, not its identity: a
+    fresh engine over an equal registry reuses the plan, and a registry
+    whose $ref target differs never gets it — an ``id()`` key would
+    serve it whenever the address was recycled."""
+    from sparkjesse import engine as engmod
+    from sparkjesse.registry import SchemaRegistry
+
+    calls = {"n": 0}
+    real = engmod.compile_plan
+
+    def counting(*a, **kw):
+        calls["n"] += 1
+        return real(*a, **kw)
+
+    monkeypatch.setattr(engmod, "compile_plan", counting)
+    df = spark.createDataFrame([(1, 5)], "doc_id long, n long")
+    schema = {"$schema": "http://json-schema.org/draft-04/schema#",
+              "type": "object",
+              "properties": {"n": {"$ref": "limits#/floor"}}}
+
+    def valid(minimum: int) -> bool:
+        reg = SchemaRegistry()
+        reg.add("limits", {"floor": {"minimum": minimum}})
+        res = engmod.ValidationEngine(registry=reg).validate(df, schema)
+        return res.annotated.first()["valid"]
+
+    assert valid(3) is True
+    n_first = calls["n"]
+    assert valid(3) is True
+    assert calls["n"] == n_first  # equal registry: cache hit
+    assert valid(9) is False
+    assert calls["n"] == n_first + 1  # other $ref target: miss
+
+
 def test_validate_multi_one_scan_no_joins(spark):
     """N schemas over one table = N verdict columns on ONE projection:
     correct verdicts, and the physical plan has no Join/Exchange."""

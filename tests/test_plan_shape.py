@@ -329,3 +329,79 @@ def test_doc_stats_equals_component_operators(spark):
             comp = composed[d.pop("doc_id")]
             for k, v in d.items():
                 assert comp[k] == v, (k, v, comp[k])
+
+
+@pytest.fixture(scope="module")
+def flagship_docs(spark, tmp_path_factory):
+    from sparkjesse.generator import interleaved_documents
+    path = str(tmp_path_factory.mktemp("flagship") / "docs")
+    interleaved_documents(spark, 2000, seed=42).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_flagship_gate_has_no_type_tautologies(flagship_docs):
+    """A ``type`` the column's dtype satisfies statically compiles to
+    nothing: the optimized row gate (interpreted once per span inside
+    the ``forall``) carries no ``isnull(v) OR isnotnull(v)`` pair."""
+    from sparkjesse.compiler import compile_plan
+    from sparkjesse.generator import INTERLEAVED_SCHEMA
+    plan = compile_plan(INTERLEAVED_SCHEMA, flagship_docs.schema)
+    text = _optimized(flagship_docs.select(plan.row_gate.alias("ok")))
+    assert "forall(spans" in text, text[:2000]
+    pairs = re.findall(r"isnull\(([^()]+)\) OR isnotnull\(\1\)", text)
+    assert not pairs, pairs
+
+
+def test_max_length_compiles_byte_guarded(flagship_docs):
+    """``maxLength`` is ``octet_length(v) <= n OR length(v) <= n`` on
+    both the row gate and the violation path: the O(1) byte count
+    decides first, and the character walk runs only when it fails."""
+    from sparkjesse.compiler import compile_plan
+    from sparkjesse.generator import INTERLEAVED_SCHEMA
+    plan = compile_plan(INTERLEAVED_SCHEMA, flagship_docs.schema)
+    for col in (plan.row_gate, plan.violations_column()):
+        text = _optimized(flagship_docs.select(col.alias("c")))
+        for n in (24, 4096):  # doc_id, spans[].text
+            guarded = re.findall(
+                r"\(octet_length\(([^()]+)\) <= %d\) OR "
+                r"\(length\(\1\) <= %d\)" % (n, n), text)
+            bare = re.findall(r"(?<!octet_)length\(([^()]+)\) <= %d" % n,
+                              text)
+            assert guarded and len(bare) == len(guarded), (n, text[:3000])
+
+
+def test_detect_hot_keys_one_collect_same_report(flagship_docs,
+                                                 monkeypatch):
+    """Hot-key detection is one collect (top keys; the sampled total
+    rides an observation on the same scan) and reports exactly what the
+    two-query form — a total, then a thresholded top 100 — reports."""
+    from sparkjesse.partitioning import SkewReport, detect_hot_keys
+
+    # the two-query computation, with sample_fraction=1.0 (no sampling)
+    counts = flagship_docs.select("doc_id").groupBy("doc_id").count()
+    rows = counts.agg(F.sum("count")).collect()[0][0]
+    thresh = max(2.0, rows * 0.002)
+    hot = (counts.where(F.col("count") >= thresh)
+                 .orderBy(F.desc("count"), "doc_id").limit(100).collect())
+    expected = SkewReport(rows, [(r["doc_id"], r["count"]) for r in hot],
+                          0.002)
+
+    collects = []
+    frame_cls = type(flagship_docs)  # the classic DataFrame in Spark 4
+    real = frame_cls.collect
+
+    def counting(self):
+        collects.append(self)
+        return real(self)
+
+    monkeypatch.setattr(frame_cls, "collect", counting)
+    got = detect_hot_keys(flagship_docs, "doc_id", sample_fraction=1.0)
+    assert len(collects) == 1
+    assert got.hot_keys, "generator should produce hot keys"
+    # equal counts may come back in either order
+    got.hot_keys.sort(key=lambda kv: (-kv[1], kv[0]))
+    assert got == expected
