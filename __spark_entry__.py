@@ -233,7 +233,7 @@ SPAN_SCHEMA = {  # per-element array validation with pointer paths
 
 def _v_span_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-element array violations with dynamic /spans/{i}/... pointer
-    paths (compiler `_items_violations` — index built inside the
+    paths (compiler `_Node.each_item` — index built inside the
     transform lambda, fully JVM-side). Spans are derived
     deterministically from the documents table: span i (0-based) =
     (kind = token i+1, offset = len(token)·(i+1)) over the first 4

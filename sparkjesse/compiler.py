@@ -1,22 +1,29 @@
 """Schema → Catalyst compiler: the heart of the engine.
 
 The reference walks the schema tree *per document* at run time
-(`/root/reference/src/jesse_validator_draft3.erl:39-191`). We invert that:
-the schema tree is walked **once, on the driver, at compile time**, emitting
-a tree of Catalyst ``Column`` expressions that Spark evaluates column-at-a-
-time inside whole-stage codegen — no per-row Python anywhere on this path.
+(`jesse_validator_draft3.erl:39-191`). We invert that: the schema tree
+is walked **once, on the driver, at compile time**, emitting a tree of
+Catalyst ``Column`` expressions that Spark evaluates column-at-a-time
+inside whole-stage codegen — no per-row Python anywhere on this path.
 
-Two products per schema:
+One walk, one keyword table: ``_walk`` visits each schema node once and,
+through ``_KEYWORDS`` (each keyword's dtype and draft applicability is
+written there once), emits
 
-* ``compile_predicate(schema, value, dtype)`` → a null-safe boolean Column
-  (``true`` = valid), used for composition (``anyOf``/``oneOf``/``not``/
-  union types/``disallow``) where only pass/fail escapes — the expression
-  analogue of jesse's fresh-state error swallowing
-  (`jesse_validator_draft3.erl:283-297`).
-* ``compile_checks(...)`` → violation-emitting checks with exact
-  jesse-style error atoms and JSON-pointer paths. Array-element paths are
-  built dynamically inside ``F.transform`` lambdas (index Column), so
-  violations carry ``/spans/3/kind``-style pointers at zero extra shuffle.
+* the node's null-safe boolean ``ok`` Column (``true`` = valid). The
+  root's ``ok`` is the row gate: valid rows, the overwhelming majority
+  at scale, evaluate only this predicate;
+* when given a location ``(path, sptr)``, the node's violation Columns
+  with exact jesse-style error atoms and JSON-pointer paths. Array-element
+  paths are built dynamically inside ``F.transform`` lambdas (index
+  Column), so violations carry ``/spans/3/kind``-style pointers at zero
+  extra shuffle, and an element's violations are built only when its
+  ``ok`` fails.
+
+Composition (``anyOf``/``oneOf``/``not``/union types/``disallow``) and
+the ``forall`` gate of ``items`` walk their subschemas ok-only: only
+pass/fail escapes — the expression analogue of jesse's fresh-state
+error swallowing (`jesse_validator_draft3.erl:283-297`).
 
 Typed-column semantics (documented deviations from dynamic JSON):
   * SQL ``NULL`` means *absent*; ``required`` fails on null. Typed columns
@@ -37,9 +44,8 @@ reference's type gating.
 
 from __future__ import annotations
 
-import json
 import re as _re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Optional
 
 import pandas as pd
@@ -67,6 +73,7 @@ from .types import VIOLATIONS_ARRAY_TYPE
 
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 _NUMERIC = _INTEGRAL + (FloatType, DoubleType, DecimalType)
+_OBJECT = (StructType, MapType)
 
 
 class CompileError(ValueError):
@@ -79,7 +86,6 @@ class CompileContext:
     draft: str = E.DRAFT4
     registry: Optional[Any] = None  # SchemaRegistry for $ref
     root_schema: Any = None
-    ref_depth: int = 0
     # true while compiling inside a higher-order-function lambda
     # (transform/forall/map-entry bodies): pandas UDFs cannot reference
     # lambda variables, so non-vetted patterns there must raise
@@ -230,8 +236,6 @@ def _kernel_pattern_col(pattern: str, value: Column) -> Column:
     caller's ``_ns`` turns that into a vacuous pass)."""
     udf = _KERNEL_PATTERN_UDFS.get(pattern)
     if udf is None:
-        import re as _re
-
         compiled = _re.compile(pattern)
 
         @F.pandas_udf("boolean")
@@ -247,13 +251,13 @@ def _kernel_pattern_col(pattern: str, value: Column) -> Column:
 def _pattern_predicate(pattern: str, value: Column,
                        ctx: "CompileContext") -> Column:
     if is_vetted_pattern(pattern):
-        return _ns(value.rlike(java_vetted_pattern(pattern)))
+        return value.rlike(java_vetted_pattern(pattern))
     if ctx.in_lambda:
         raise CompileError(
             f"pattern {pattern!r} is outside the vetted PCRE/Java-regex "
             "subset and sits inside an array lambda — kernel fallback "
             "required")
-    return _ns(_kernel_pattern_col(pattern, value))
+    return _kernel_pattern_col(pattern, value)
 
 
 def _require_vetted_key_pattern(pattern: str) -> None:
@@ -297,7 +301,7 @@ def _static_type_match(type_name: str, dtype: DataType) -> Optional[bool]:
     if type_name == "boolean":
         return isinstance(dtype, BooleanType)
     if type_name == "object":
-        return isinstance(dtype, (StructType, MapType))
+        return isinstance(dtype, _OBJECT)
     if type_name == "array":
         return isinstance(dtype, ArrayType)
     if type_name == "null":
@@ -370,31 +374,234 @@ def _deref(ctx: CompileContext, schema: dict) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# predicate compiler — true ⇒ valid, null-safe
+# the compile walk — one keyword table, one pass per schema node
 # ---------------------------------------------------------------------------
 
-def compile_predicate(schema: Any, value: Column, dtype: DataType,
-                      ctx: CompileContext, _depth: int = 0) -> Column:
-    if not isinstance(schema, dict) or not schema:
-        return _true()
-    if _depth > 48:
-        raise CompileError("schema nesting too deep for expression compile")
-    schema = _deref(ctx, schema)
-    preds: list[Column] = []
-    for kw, arg in schema.items():
-        p = _keyword_predicate(kw, arg, schema, value, dtype, ctx, _depth)
-        if p is not None:
-            preds.append(p)
-    if not preds:
-        return _true()
-    out = preds[0]
-    for p in preds[1:]:
+def _all(parts: list) -> Column:
+    """Conjunction of ``parts``; ``true`` when there are none."""
+    out = parts[0] if parts else _true()
+    for p in parts[1:]:
         out = out & p
     return out
 
 
-def _type_predicate(arg: Any, value: Column, dtype: DataType,
-                    ctx: CompileContext, _depth: int) -> Optional[Column]:
+def _child_path(path: "str | Column", seg: str) -> "str | Column":
+    """Pointer paths stay Python strings until an array or map lambda
+    makes them runtime Columns."""
+    return path + seg if isinstance(path, str) else F.concat(path, F.lit(seg))
+
+
+def _path_col(path: "str | Column") -> Column:
+    return F.lit(path) if isinstance(path, str) else path
+
+
+def _pack(scalars: list, arrays: list) -> Column:
+    """One array<violation> Column from viol-or-null Columns and
+    array<violation> Columns, in that order."""
+    parts = ([F.array_compact(F.array(*scalars))] if scalars else []) + arrays
+    if not parts:
+        return _empty_violations()
+    return parts[0] if len(parts) == 1 else F.concat(*parts)
+
+
+def _lambda_ctx(ctx: CompileContext) -> CompileContext:
+    return ctx if ctx.in_lambda else replace(ctx, in_lambda=True)
+
+
+class _Node:
+    """One schema node compiled over one instance Column.
+
+    ``oks`` collects the node's null-safe keyword predicates (true ⇒
+    valid). When the walk has a location ``at = (path, sptr)``,
+    ``scalars`` (viol-or-null Columns) and ``arrays`` (array<violation>
+    Columns) collect its violation rows in keyword order; without one
+    they stay empty.
+
+    The root node is the row itself (``value`` None): its properties
+    bind the top-level columns directly and it is never absent.
+    Keywords that need the row as one value see it as a struct."""
+
+    def __init__(self, schema: dict, value: Optional[Column],
+                 dtype: DataType, ctx: CompileContext, depth: int,
+                 at: Optional[tuple]) -> None:
+        self.schema, self.dtype, self.ctx, self.depth = \
+            schema, dtype, ctx, depth
+        self.draft3 = ctx.draft == E.DRAFT3
+        self.row = value is None
+        self.value = F.struct(*[F.col(f_.name) for f_ in dtype.fields]) \
+            if self.row else value
+        self.is_object = isinstance(dtype, _OBJECT)
+        self.fields = {f_.name: f_.dataType for f_ in dtype.fields} \
+            if isinstance(dtype, StructType) else {}
+        self.at = at is not None
+        self.path, self.sptr = at if self.at else (None, "")
+        self.vj = _value_json(self.value, dtype) if self.at else None
+        self.oks: list[Column] = []
+        self.scalars: list[Column] = []
+        self.arrays: list[Column] = []
+
+    def field(self, name: str) -> Column:
+        return F.col(name) if self.row else self.value.getField(name)
+
+    def has(self, name: str) -> Column:
+        """The object has property ``name`` (SQL NULL means absent)."""
+        if isinstance(self.dtype, MapType):
+            return F.map_contains_key(self.value, F.lit(name))
+        if name in self.fields:
+            return self.field(name).isNotNull()
+        return F.lit(False)
+
+    def guard(self, ok: Column) -> Column:
+        """An absent object passes (``required`` handles presence)."""
+        if self.row:
+            return ok
+        return self.value.isNull() | F.coalesce(ok, F.lit(False))
+
+    def present(self, cond: Column) -> Column:
+        return cond if self.row else self.value.isNotNull() & cond
+
+    def fail(self, cond: Column, atom: str, sptr: str,
+             seg: Optional[str] = None, detail: "str | Column" = "",
+             value_json: Optional[Column] = None) -> None:
+        """A violation row where ``cond`` holds (NULL ⇒ none)."""
+        if self.at:
+            path = self.path if seg is None else _child_path(self.path, seg)
+            self.scalars.append(F.when(cond, _viol(
+                atom, _path_col(path), sptr,
+                self.vj if value_json is None else value_json, detail)))
+
+    def check(self, kw: str, atom: str, pred: Optional[Column]) -> None:
+        """A keyword that fails as one row when ``pred`` is false;
+        None ⇒ vacuous for this dtype."""
+        if pred is not None:
+            self.oks.append(pred)
+            self.fail(~pred, atom, self.sptr + "/" + kw)
+
+    def missing(self, sptr: str, name: str) -> None:
+        """``missing_required_property`` for ``name`` on a present
+        object. Row-level ones carry value_json "" — the typed path's
+        established output, pinned by the violation snapshot test."""
+        self.fail(self.present(~self.has(name)),
+                  E.MISSING_REQUIRED_PROPERTY, sptr, detail=name,
+                  value_json=F.lit("") if self.row else None)
+
+    def add(self, scalars: list, arrays: list,
+            when: Optional[Column] = None) -> None:
+        if when is not None:
+            scalars = [F.when(when, c) for c in scalars]
+            arrays = [F.when(when, a).otherwise(_empty_violations())
+                      for a in arrays]
+        self.scalars.extend(scalars)
+        self.arrays.extend(arrays)
+
+    def sub(self, schema: Any, value: Column, dtype: DataType,
+            seg: Optional[str] = None, sptr: str = "",
+            when: Optional[Column] = None) -> Column:
+        """Walk ``schema`` over a child instance at path segment ``seg``
+        (None: this node's own path); its violations join this node's,
+        gated by ``when``. Returns its ok."""
+        at = None
+        if self.at:
+            at = (self.path if seg is None else _child_path(self.path, seg),
+                  sptr)
+        ok, scalars, arrays = _walk(schema, value, dtype, self.ctx,
+                                    self.depth + 1, at)
+        self.add(scalars, arrays, when)
+        return ok
+
+    def test(self, schema: Any) -> Column:
+        """ok-only walk of ``schema`` over this node's own instance —
+        for combinators, where only pass/fail escapes (the expression
+        analogue of jesse's fresh-state error swallowing,
+        `jesse_validator_draft3.erl:283-297`)."""
+        return _walk(schema, self.value, self.dtype, self.ctx,
+                     self.depth + 1)[0]
+
+    def each_item(self, sub: Any, arr: Column, sptr: str, offset: int = 0,
+                  when: Optional[Column] = None) -> Column:
+        """``sub`` over every element of ``arr``: a ``forall`` ok, and
+        per-element violations with dynamic 0-based pointer indices —
+        jesse pushes the index per element
+        (`jesse_validator_draft3.erl:488-503`); we build it inside a
+        transform lambda, still fully JVM-side."""
+        et, lctx, depth = self.dtype.elementType, _lambda_ctx(self.ctx), \
+            self.depth + 1
+        ok = _ns(F.forall(arr, lambda x: _walk(sub, x, et, lctx, depth)[0]))
+        if not self.at:
+            return ok
+
+        # short-circuit gate (SURVEY.md §4.2): evaluate the allocation-free
+        # boolean predicate first and only build violation structs/arrays
+        # for FAILING elements. At ~10 checks/span this removes ~all array
+        # allocation from the valid-data hot path — validation becomes
+        # compute-bound instead of GC-bound, which is what lets throughput
+        # scale with cores.
+        def per_element(x: Column, i: Column) -> Column:
+            path = F.concat(_path_col(self.path), F.lit("/"),
+                            (i + F.lit(offset)).cast("string"))
+            x_ok, scalars, arrays = _walk(sub, x, et, lctx, depth,
+                                          (path, sptr))
+            if not (scalars or arrays):
+                return _empty_violations()
+            return F.when(x_ok, _empty_violations()) \
+                .otherwise(_pack(scalars, arrays))
+
+        self.add([], [F.coalesce(F.flatten(F.transform(arr, per_element)),
+                                 _empty_violations())], when)
+        return ok
+
+    def each_entry(self, sub: Any, sptr: str, key_gate) -> Column:
+        """``sub`` over the value of every map entry whose key passes
+        ``key_gate``, at path ``<map>/<escaped-key>`` — the kernel's
+        per-property descend for patternProperties / schema-valued
+        additionalProperties. Fully JVM-side (map_entries + transform)."""
+        vt, lctx, depth = self.dtype.valueType, _lambda_ctx(self.ctx), \
+            self.depth + 1
+        entries = F.map_entries(self.value)
+        ok = F.forall(entries, lambda e: ~key_gate(e.getField("key")) | _walk(
+            sub, e.getField("value"), vt, lctx, depth)[0])
+        if not self.at:
+            return ok
+
+        def per_entry(e: Column) -> Column:
+            k = e.getField("key")
+            path = F.concat(_path_col(self.path), F.lit("/"),
+                            _escape_key_col(k))
+            _, scalars, arrays = _walk(sub, e.getField("value"), vt, lctx,
+                                       depth, (path, sptr))
+            if not (scalars or arrays):
+                return _empty_violations()
+            return F.when(key_gate(k), _pack(scalars, arrays)) \
+                .otherwise(_empty_violations())
+
+        self.arrays.append(F.coalesce(
+            F.flatten(F.transform(entries, per_entry)), _empty_violations()))
+        return ok
+
+
+def _walk(schema: Any, value: Optional[Column], dtype: DataType,
+          ctx: CompileContext, depth: int,
+          at: Optional[tuple] = None) -> tuple[Column, list, list]:
+    """Compile one schema node over ``value`` (None: the row itself).
+
+    Returns ``(ok, scalars, arrays)``: the node's null-safe predicate
+    (true ⇒ valid) and, when ``at = (path, sptr)`` is given, its
+    violation Columns — viol-or-null scalars and array<violation>
+    Columns, each in keyword order. ``path`` is the instance pointer
+    (a str while static), ``sptr`` the schema pointer."""
+    if not isinstance(schema, dict) or not schema:
+        return _true(), [], []
+    if depth > 48:
+        raise CompileError("schema nesting too deep for expression compile")
+    n = _Node(_deref(ctx, schema), value, dtype, ctx, depth, at)
+    for kw, arg in n.schema.items():
+        draft, handle = _KEYWORDS.get(kw, (None, None))
+        if handle is not None and draft in (None, ctx.draft):
+            handle(n, kw, arg)
+    return _all(n.oks), n.scalars, n.arrays
+
+
+def _type_predicate(arg: Any, n: _Node) -> Optional[Column]:
     """Membership predicate for a type name / union-with-inline-schemas,
     or None when the dtype statically satisfies a member: an absent
     value passes and a present one matches, so the runtime form would
@@ -403,201 +610,23 @@ def _type_predicate(arg: Any, value: Column, dtype: DataType,
     members = arg if isinstance(arg, list) else [arg]
     # a member that is neither a name nor a schema accepts (jesse parity)
     if any(not isinstance(m, (dict, str))
-           or isinstance(m, str) and _static_type_match(m, dtype)
+           or isinstance(m, str) and _static_type_match(m, n.dtype)
            for m in members):
         return None
     out: Optional[Column] = None
     for member in members:
         if isinstance(member, str):
             # statically impossible, or "null" (runtime-dependent)
-            m = value.isNull() if member == "null" else F.lit(False)
-        elif ctx.draft == E.DRAFT3:
-            m = compile_predicate(member, value, dtype, ctx, _depth + 1)
+            m = n.value.isNull() if member == "null" else F.lit(False)
+        elif n.draft3:
+            m = n.test(member)
         else:
             continue  # draft4 type members are names only
         out = m if out is None else (out | m)
     if out is None:
         return None
     # absent values pass the type check (required handles presence)
-    return value.isNull() | F.coalesce(out, F.lit(False))
-
-
-def _keyword_predicate(kw: str, arg: Any, schema: dict, value: Column,
-                       dtype: DataType, ctx: CompileContext,
-                       _depth: int) -> Optional[Column]:
-    """Predicate for one keyword, or None when vacuous for this dtype."""
-    draft3 = ctx.draft == E.DRAFT3
-
-    if kw == "type":
-        return _type_predicate(arg, value, dtype, ctx, _depth)
-
-    if kw == "enum" and isinstance(arg, list):
-        return _enum_predicate(arg, value, dtype, ctx.draft)
-
-    if kw in ("minimum", "maximum") and _is_numeric(dtype):
-        exclusive = schema.get("exclusive" + kw.capitalize()) is True
-        if kw == "minimum":
-            cond = value > F.lit(arg) if exclusive else value >= F.lit(arg)
-        else:
-            cond = value < F.lit(arg) if exclusive else value <= F.lit(arg)
-        return _ns(cond)
-
-    if kw == "divisibleBy" and draft3 and _is_numeric(dtype):
-        return _ns(_divisible_exact(value, arg))
-
-    if kw == "multipleOf" and not draft3 and _is_numeric(dtype):
-        return _ns(_multiple_of(value, arg))
-
-    if kw == "minLength" and isinstance(dtype, StringType):
-        return _ns(F.length(value) >= F.lit(arg))
-    if kw == "maxLength" and isinstance(dtype, StringType):
-        # exact: a UTF-8 string never has more characters than bytes.
-        # The byte count is O(1); length() walks every character, and
-        # runs only when the byte count fails
-        return _ns((F.octet_length(value) <= F.lit(arg))
-                   | (F.length(value) <= F.lit(arg)))
-    if kw == "pattern" and isinstance(dtype, StringType):
-        return _pattern_predicate(arg, value, ctx)
-
-    if kw == "minItems" and isinstance(dtype, ArrayType):
-        return _ns(F.size(value) >= F.lit(arg))
-    if kw == "maxItems" and isinstance(dtype, ArrayType):
-        return _ns(F.size(value) <= F.lit(arg))
-    if kw == "uniqueItems" and arg is True and isinstance(dtype, ArrayType):
-        return _ns(F.size(F.array_distinct(value)) == F.size(value))
-
-    if kw == "items" and isinstance(dtype, ArrayType):
-        if isinstance(arg, dict):
-            return _ns(F.forall(value, lambda x: _rebind_predicate(
-                arg, x, dtype.elementType, ctx, _depth)))
-        if isinstance(arg, list):
-            return _tuple_items_predicate(arg, schema, value, dtype, ctx,
-                                          _depth)
-        return None
-
-    if kw == "properties" and isinstance(arg, dict):
-        return _properties_predicate(arg, schema, value, dtype, ctx, _depth)
-
-    if kw == "required" and not draft3 and isinstance(arg, list):
-        return _required_predicate(arg, value, dtype)
-
-    if kw == "dependencies" and isinstance(arg, dict):
-        return _dependencies_predicate(arg, value, dtype, ctx, _depth)
-
-    # min/maxProperties are draft4-only; the draft3 reference skips
-    # unknown keywords (`jesse_validator_draft3.erl:190-191`)
-    if kw == "minProperties" and not draft3 and isinstance(dtype, MapType):
-        return _ns(F.size(F.map_keys(value)) >= F.lit(arg))
-    if kw == "maxProperties" and not draft3 and isinstance(dtype, MapType):
-        return _ns(F.size(F.map_keys(value)) <= F.lit(arg))
-    if kw == "minProperties" and not draft3 and isinstance(dtype, StructType):
-        return _ns(_present_field_count(value, dtype) >= F.lit(arg))
-    if kw == "maxProperties" and not draft3 and isinstance(dtype, StructType):
-        return _ns(_present_field_count(value, dtype) <= F.lit(arg))
-
-    if kw in ("patternProperties", "additionalProperties"):
-        return _map_properties_predicate(kw, arg, schema, value, dtype,
-                                         ctx, _depth)
-
-    # combinators are draft4-only (the draft3 reference skips unknown
-    # keywords, `jesse_validator_draft3.erl:190-191`)
-    if kw == "allOf" and not draft3 and isinstance(arg, list):
-        out = _true()
-        for sub in arg:
-            out = out & compile_predicate(sub, value, dtype, ctx, _depth + 1)
-        return out
-    if kw == "anyOf" and not draft3 and isinstance(arg, list):
-        out = F.lit(False)
-        for sub in arg:
-            out = out | compile_predicate(sub, value, dtype, ctx, _depth + 1)
-        return value.isNull() | out
-    if kw == "oneOf" and not draft3 and isinstance(arg, list):
-        n = F.lit(0)
-        for sub in arg:
-            n = n + F.when(
-                compile_predicate(sub, value, dtype, ctx, _depth + 1), 1
-            ).otherwise(0)
-        return value.isNull() | (n == 1)
-    if kw == "not" and not draft3 and isinstance(arg, dict):
-        return value.isNull() | \
-            ~F.coalesce(compile_predicate(arg, value, dtype, ctx, _depth + 1),
-                        F.lit(True))
-
-    if kw == "disallow" and draft3:
-        allowed = _type_predicate(arg, value, dtype, ctx, _depth)
-        if allowed is None:  # every present value has a disallowed type
-            return value.isNull()
-        return value.isNull() | ~F.coalesce(allowed, F.lit(True))
-
-    if kw == "extends" and draft3:
-        subs = arg if isinstance(arg, list) else [arg]
-        out = _true()
-        for sub in subs:
-            if isinstance(sub, dict):
-                out = out & compile_predicate(sub, value, dtype, ctx,
-                                              _depth + 1)
-        return out
-
-    # format: no-op; unsupported/inapplicable keywords: vacuous
-    return None
-
-
-def _rebind_predicate(schema: Any, x: Column, elem_type: DataType,
-                      ctx: CompileContext, _depth: int) -> Column:
-    from dataclasses import replace as _replace
-    lctx = ctx if ctx.in_lambda else _replace(ctx, in_lambda=True)
-    return F.coalesce(
-        compile_predicate(schema, x, elem_type, lctx, _depth + 1),
-        F.lit(True))
-
-
-def _tuple_items_predicate(subs: list, schema: dict, value: Column,
-                           dtype: ArrayType, ctx: CompileContext,
-                           _depth: int) -> Column:
-    """Tuple-form ``items`` + ``additionalItems``. Reference semantics
-    (`jesse_validator_draft3.erl:511-536`): too-short ⇒ invalid
-    (``not_enought_items``); longer with additionalItems absent/true ⇒
-    valid *without validating the prefix* (reference quirk, `:524-526`);
-    additionalItems false ⇒ invalid; schema ⇒ prefix + extras checked.
-    Draft4: prefix always checked, short arrays fine."""
-    n = len(subs)
-    size = F.size(value)
-    additional = schema.get("additionalItems")
-    elem_type = dtype.elementType
-    base = _true()
-    for i, sub in enumerate(subs):
-        if isinstance(sub, dict):
-            base = base & _rebind_predicate(sub, F.get(value, i), elem_type,
-                                            ctx, _depth)
-    extras_ok = _true()
-    if isinstance(additional, dict):
-        extras_ok = F.coalesce(
-            F.forall(F.slice(value, n + 1,
-                             F.greatest(size - n, F.lit(0))),
-                     lambda x: _rebind_predicate(additional, x, elem_type,
-                                                 ctx, _depth)),
-            F.lit(True))
-    if ctx.draft == E.DRAFT3:
-        if additional is None or additional is True:
-            out = (F.when(size < n, F.lit(False))
-                    .when(size == n, base)
-                    .otherwise(F.lit(True)))
-        elif additional is False:
-            out = F.when(size == n, base).otherwise(F.lit(False))
-        else:
-            out = F.when(size < n, F.lit(False)).otherwise(base & extras_ok)
-    else:
-        out = base & extras_ok
-        if additional is False:
-            out = out & (size <= n)
-    return value.isNull() | F.coalesce(out, F.lit(False))
-
-
-def _present_field_count(value: Column, dtype: StructType) -> Column:
-    n = F.lit(0)
-    for f_ in dtype.fields:
-        n = n + F.when(value.getField(f_.name).isNotNull(), 1).otherwise(0)
-    return F.when(value.isNull(), F.lit(None)).otherwise(n)
+    return n.value.isNull() | F.coalesce(out, F.lit(False))
 
 
 def _enum_predicate(members: list, value: Column, dtype: DataType,
@@ -644,98 +673,6 @@ def _enum_predicate(members: list, value: Column, dtype: DataType,
     return value.isNull() | F.coalesce(value.isin(scalars), F.lit(False))
 
 
-def _properties_predicate(arg: dict, schema: dict, value: Column,
-                          dtype: DataType, ctx: CompileContext,
-                          _depth: int) -> Optional[Column]:
-    draft3 = ctx.draft == E.DRAFT3
-    if isinstance(dtype, StructType):
-        by_name = {f_.name: f_ for f_ in dtype.fields}
-        out = _true()
-        for name, sub in arg.items():
-            if not isinstance(sub, dict):
-                continue
-            fld = by_name.get(name)
-            if fld is None:
-                if draft3 and sub.get("required") is True:
-                    out = out & F.lit(False)
-                continue
-            child = value.getField(name)
-            out = out & compile_predicate(sub, child, fld.dataType, ctx,
-                                          _depth + 1)
-            if draft3 and sub.get("required") is True:
-                out = out & child.isNotNull()
-        return value.isNull() | F.coalesce(out, F.lit(False))
-    if isinstance(dtype, MapType):
-        out = _true()
-        for name, sub in arg.items():
-            if not isinstance(sub, dict):
-                continue
-            child = F.element_at(value, F.lit(name))
-            out = out & compile_predicate(sub, child, dtype.valueType, ctx,
-                                          _depth + 1)
-            if draft3 and sub.get("required") is True:
-                out = out & F.map_contains_key(value, F.lit(name))
-        return value.isNull() | F.coalesce(out, F.lit(False))
-    return None  # not an object column — vacuous
-
-
-def _required_predicate(names: list, value: Column,
-                        dtype: DataType) -> Optional[Column]:
-    if isinstance(dtype, StructType):
-        by_name = {f_.name for f_ in dtype.fields}
-        out = _true()
-        for name in names:
-            if name in by_name:
-                out = out & value.getField(name).isNotNull()
-            else:
-                out = out & F.lit(False)
-        return value.isNull() | F.coalesce(out, F.lit(False))
-    if isinstance(dtype, MapType):
-        out = _true()
-        for name in names:
-            out = out & F.map_contains_key(value, F.lit(name))
-        return value.isNull() | F.coalesce(out, F.lit(False))
-    return None
-
-
-def _dependencies_predicate(deps: dict, value: Column, dtype: DataType,
-                            ctx: CompileContext,
-                            _depth: int) -> Optional[Column]:
-    def has(name: str) -> Column:
-        if isinstance(dtype, StructType):
-            if name in {f_.name for f_ in dtype.fields}:
-                return value.getField(name).isNotNull()
-            return F.lit(False)
-        return F.map_contains_key(value, F.lit(name))
-
-    if not isinstance(dtype, (StructType, MapType)):
-        return None
-    out = _true()
-    for dep_name, dep in deps.items():
-        trigger = has(dep_name)
-        if isinstance(dep, str):
-            req: Column = has(dep)
-        elif isinstance(dep, list):
-            req = _true()
-            for member in dep:
-                if isinstance(member, str):
-                    req = req & has(member)
-                elif isinstance(member, dict) and ctx.draft == E.DRAFT3:
-                    # draft3 array members may themselves be schemas
-                    # (check_dependency_array → check_dependency_value)
-                    req = req & F.coalesce(
-                        compile_predicate(member, value, dtype, ctx,
-                                          _depth + 1), F.lit(True))
-        elif isinstance(dep, dict):
-            req = F.coalesce(
-                compile_predicate(dep, value, dtype, ctx, _depth + 1),
-                F.lit(True))
-        else:
-            raise CompileError("wrong_type_dependency in schema")
-        out = out & (~F.coalesce(trigger, F.lit(False)) | req)
-    return value.isNull() | F.coalesce(out, F.lit(False))
-
-
 def _py_key_search(pattern: str, name: str) -> bool:
     """Compile-time key match with kernel/jesse semantics (unanchored
     ``re.search``; invalid pattern ⇒ no match) for STATIC struct field
@@ -755,78 +692,6 @@ def _struct_extras(schema: dict, dtype: StructType) -> list:
     return [f_ for f_ in dtype.fields
             if f_.name not in known
             and not any(_py_key_search(p, f_.name) for p in patterns)]
-
-
-def _map_properties_predicate(kw: str, arg: Any, schema: dict, value: Column,
-                              dtype: DataType, ctx: CompileContext,
-                              _depth: int) -> Optional[Column]:
-    if not isinstance(dtype, MapType):
-        if not isinstance(dtype, StructType):
-            return None
-        if kw == "patternProperties" and isinstance(arg, dict):
-            out = _true()
-            for pattern, sub in arg.items():
-                if not isinstance(sub, dict):
-                    continue
-                for f_ in dtype.fields:
-                    if _py_key_search(pattern, f_.name):
-                        out = out & compile_predicate(
-                            sub, value.getField(f_.name), f_.dataType,
-                            ctx, _depth + 1)
-            return value.isNull() | F.coalesce(out, F.lit(False))
-        if kw == "additionalProperties" and arg is False:
-            out = _true()
-            for f_ in _struct_extras(schema, dtype):
-                out = out & value.getField(f_.name).isNull()
-            return value.isNull() | F.coalesce(out, F.lit(False))
-        if kw == "additionalProperties" and isinstance(arg, dict):
-            out = _true()
-            for f_ in _struct_extras(schema, dtype):
-                out = out & compile_predicate(
-                    arg, value.getField(f_.name), f_.dataType, ctx,
-                    _depth + 1)
-            return value.isNull() | F.coalesce(out, F.lit(False))
-        return None
-    if kw == "patternProperties" and isinstance(arg, dict):
-        # single-arg lambda via factory — Spark calls multi-parameter
-        # lambdas with (element, index), breaking default-arg closures
-        def entry_check(p: str, s: Any):
-            return lambda e: ~e.getField("key").rlike(java_vetted_pattern(p)) \
-                | _rebind_predicate(s, e.getField("value"),
-                                    dtype.valueType, ctx, _depth)
-
-        out = _true()
-        for pattern, sub in arg.items():
-            _require_vetted_key_pattern(pattern)
-            out = out & F.forall(F.map_entries(value),
-                                 entry_check(pattern, sub))
-        return value.isNull() | F.coalesce(out, F.lit(False))
-    if kw == "additionalProperties":
-        if arg is True:
-            return None
-        known = list((schema.get("properties") or {}).keys())
-        patterns = list((schema.get("patternProperties") or {}).keys())
-        for p in patterns:
-            _require_vetted_key_pattern(p)
-
-        def is_extra(e: Column) -> Column:
-            k = e.getField("key")
-            cond = ~k.isin(known) if known else F.lit(True)
-            for p in patterns:
-                cond = cond & ~k.rlike(java_vetted_pattern(p))
-            return cond
-
-        if arg is False:
-            out = F.forall(F.map_entries(value), lambda e: ~is_extra(e))
-        elif isinstance(arg, dict):
-            out = F.forall(
-                F.map_entries(value),
-                lambda e: ~is_extra(e) | _rebind_predicate(
-                    arg, e.getField("value"), dtype.valueType, ctx, _depth))
-        else:
-            return None
-        return value.isNull() | F.coalesce(out, F.lit(False))
-    return None
 
 
 def _divisible_exact(value: Column, divisor: Any) -> Column:
@@ -849,7 +714,353 @@ def _multiple_of(value: Column, divisor: Any) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# violation compiler — per-keyword violation rows with pointer paths
+# keyword handlers — each keyword's dtype and draft applicability lives
+# in exactly one place, and one call emits its ok and its violations
+# ---------------------------------------------------------------------------
+
+def _one_row(atom: str, dtypes, pred):
+    """A keyword that applies to ``dtypes`` and fails as one violation
+    row when ``pred(n, kw, arg)`` is false (NULL ⇒ vacuous pass; a None
+    predicate ⇒ nothing to check)."""
+    def handle(n: _Node, kw: str, arg: Any) -> None:
+        if isinstance(n.dtype, dtypes):
+            cond = pred(n, kw, arg)
+            if cond is not None:
+                n.check(kw, atom, _ns(cond))
+    return handle
+
+
+def _bound(n: _Node, kw: str, arg: Any) -> Column:
+    exclusive = n.schema.get("exclusive" + kw.capitalize()) is True
+    v, lim = n.value, F.lit(arg)
+    if kw == "minimum":
+        return v > lim if exclusive else v >= lim
+    return v < lim if exclusive else v <= lim
+
+
+def _max_length(n: _Node, kw: str, arg: Any) -> Column:
+    # exact: a UTF-8 string never has more characters than bytes.
+    # The byte count is O(1); length() walks every character, and
+    # runs only when the byte count fails
+    return (F.octet_length(n.value) <= F.lit(arg)) \
+        | (F.length(n.value) <= F.lit(arg))
+
+
+def _property_count(n: _Node) -> Column:
+    if isinstance(n.dtype, MapType):
+        return F.size(F.map_keys(n.value))
+    count = F.lit(0)
+    for f_ in n.dtype.fields:
+        count = count + F.when(n.value.getField(f_.name).isNotNull(), 1) \
+            .otherwise(0)
+    return F.when(n.value.isNull(), F.lit(None)).otherwise(count)
+
+
+def _type(n: _Node, kw: str, arg: Any) -> None:
+    n.check(kw, E.WRONG_TYPE, _type_predicate(arg, n))
+
+
+def _disallow(n: _Node, kw: str, arg: Any) -> None:
+    allowed = _type_predicate(arg, n)
+    if allowed is None:  # every present value has a disallowed type
+        n.check(kw, E.NOT_ALLOWED, n.value.isNull())
+    else:
+        n.check(kw, E.NOT_ALLOWED, n.value.isNull() | ~allowed)
+
+
+def _enum(n: _Node, kw: str, arg: Any) -> None:
+    if isinstance(arg, list):
+        n.check(kw, E.NOT_IN_RANGE,
+                _enum_predicate(arg, n.value, n.dtype, n.ctx.draft))
+
+
+def _any_of(n: _Node, kw: str, arg: Any) -> None:
+    """anyOf / oneOf: one violation row when not exactly the required
+    number of subschemas pass."""
+    if not isinstance(arg, list):
+        return
+    oks = [n.test(sub) for sub in arg]
+    if kw == "anyOf":
+        out = F.lit(False)
+        for p in oks:
+            out = out | p
+        n.check(kw, E.ANY_SCHEMAS_NOT_VALID, n.value.isNull() | out)
+    else:
+        count = F.lit(0)
+        for p in oks:
+            count = count + F.when(p, 1).otherwise(0)
+        n.check(kw, E.NOT_ONE_SCHEMA_VALID, n.value.isNull() | (count == 1))
+
+
+def _not(n: _Node, kw: str, arg: Any) -> None:
+    if isinstance(arg, dict):
+        n.check(kw, E.NOT_SCHEMA_VALID, n.value.isNull() | ~n.test(arg))
+
+
+def _all_of(n: _Node, kw: str, arg: Any) -> None:
+    """allOf (draft4) / extends (draft3): full sub-error propagation at
+    the same instance path (kernel ``_descend`` per member, no
+    collapsing)."""
+    if isinstance(arg, list):
+        subs = list(enumerate(arg))
+    elif isinstance(arg, dict) and kw == "extends":
+        subs = [(None, arg)]
+    else:
+        return
+    oks = [n.sub(sub, n.value, n.dtype, sptr=n.sptr + "/" + kw
+                 + ("" if i is None else f"/{i}"))
+           for i, sub in subs if isinstance(sub, dict)]
+    if oks:
+        n.oks.append(_all(oks))
+
+
+def _items(n: _Node, kw: str, arg: Any) -> None:
+    if not isinstance(n.dtype, ArrayType):
+        return
+    if isinstance(arg, dict):
+        n.oks.append(n.each_item(arg, n.value, n.sptr + "/items"))
+    elif isinstance(arg, list):
+        n.oks.append(_tuple_items(n, arg))
+
+
+def _tuple_items(n: _Node, subs: list) -> Column:
+    """Tuple-form ``items`` + ``additionalItems`` with per-index pointer
+    paths (0-based, `jesse_schema_validator_tests.erl:107-135`).
+    Reference semantics (`jesse_validator_draft3.erl:511-536`):
+    too-short ⇒ invalid (``not_enought_items``); longer with
+    additionalItems absent/true ⇒ valid *without validating the prefix*
+    (reference quirk, `:524-526`); additionalItems false ⇒ invalid;
+    schema ⇒ prefix + extras checked. Draft4: prefix always checked,
+    short arrays fine."""
+    k, size = len(subs), F.size(n.value)
+    additional = n.schema.get("additionalItems")
+    prefix_active = None
+    if n.draft3:
+        n.fail(n.present(size < k), E.NOT_ENOUGHT_ITEMS, n.sptr + "/items")
+        prefix_active = (size == k) | \
+            ((size > k) & F.lit(isinstance(additional, dict)))
+    if additional is False:
+        n.fail(n.present(size > k), E.NO_EXTRA_ITEMS_ALLOWED,
+               n.sptr + "/additionalItems")
+    base = _all([n.sub(sub, F.get(n.value, i), n.dtype.elementType, f"/{i}",
+                       n.sptr + f"/items/{i}", when=prefix_active)
+                 for i, sub in enumerate(subs) if isinstance(sub, dict)])
+    extras_ok = _true()
+    if isinstance(additional, dict):
+        extras = F.slice(n.value, k + 1, F.greatest(size - k, F.lit(0)))
+        extras_ok = n.each_item(additional, extras,
+                                n.sptr + "/additionalItems", offset=k,
+                                when=n.present(size > k))
+    if n.draft3:
+        if additional is None or additional is True:
+            out = (F.when(size < k, F.lit(False))
+                    .when(size == k, base)
+                    .otherwise(F.lit(True)))
+        elif additional is False:
+            out = F.when(size == k, base).otherwise(F.lit(False))
+        else:
+            out = F.when(size < k, F.lit(False)).otherwise(base & extras_ok)
+    else:
+        out = base & extras_ok
+        if additional is False:
+            out = out & (size <= k)
+    return n.value.isNull() | F.coalesce(out, F.lit(False))
+
+
+def _properties(n: _Node, kw: str, arg: Any) -> None:
+    if not isinstance(arg, dict) or not n.is_object:
+        return
+    oks = []
+    for name, sub in arg.items():
+        if not isinstance(sub, dict):
+            continue
+        seg = "/" + E.pointer_escape(name)
+        sptr = n.sptr + "/properties" + seg
+        if n.draft3 and sub.get("required") is True:
+            n.missing(sptr, name)
+            oks.append(n.has(name))
+        if isinstance(n.dtype, MapType):
+            oks.append(n.sub(sub, F.element_at(n.value, F.lit(name)),
+                             n.dtype.valueType, seg, sptr))
+        elif name in n.fields:
+            oks.append(n.sub(sub, n.field(name), n.fields[name], seg, sptr))
+    n.oks.append(n.guard(_all(oks)))
+
+
+def _required(n: _Node, kw: str, arg: Any) -> None:
+    if isinstance(arg, list) and n.is_object:
+        for name in arg:
+            n.missing(n.sptr + "/required", name)
+        n.oks.append(n.guard(_all([n.has(name) for name in arg])))
+
+
+def _dependencies(n: _Node, kw: str, arg: Any) -> None:
+    if not isinstance(arg, dict) or not n.is_object:
+        return
+    oks = []
+    for name, dep in arg.items():
+        if isinstance(dep, dict):
+            members = [dep]
+        elif isinstance(dep, (str, list)):
+            # draft3 array members may themselves be schemas
+            # (check_dependency_array → check_dependency_value)
+            members = [dep] if isinstance(dep, str) else [
+                m for m in dep
+                if isinstance(m, str) or n.draft3 and isinstance(m, dict)]
+        else:
+            raise CompileError("wrong_type_dependency in schema")
+        trigger = n.has(name)
+        sptr = n.sptr + "/dependencies/" + E.pointer_escape(name)
+        reqs = []
+        for m in members:
+            if isinstance(m, str):
+                # one missing_dependency PER missing name
+                # (check_dependency_array folds per member)
+                reqs.append(n.has(m))
+                n.fail(n.present(trigger & ~n.has(m)), E.MISSING_DEPENDENCY,
+                       sptr, detail=m)
+            else:
+                # draft3 pushes the dependency name on the instance path
+                # (check_value(DependencyName, ...), reference :600-605);
+                # draft4 validates at the object's own path
+                seg = "/" + E.pointer_escape(name) if n.draft3 else None
+                reqs.append(n.sub(m, n.value, n.dtype, seg, sptr,
+                                  when=n.present(trigger)))
+        oks.append(~trigger | _all(reqs))
+    n.oks.append(n.guard(_all(oks)))
+
+
+def _pattern_properties(n: _Node, kw: str, arg: Any) -> None:
+    if not isinstance(arg, dict) or not n.is_object:
+        return
+    subs = {p: s for p, s in arg.items() if isinstance(s, dict)}
+    if isinstance(n.dtype, StructType):
+        # static field names: compile-time Python-re match — exact
+        # kernel/jesse semantics, no vetting needed
+        oks = [n.sub(s, n.field(f_.name), f_.dataType,
+                     "/" + E.pointer_escape(f_.name),
+                     n.sptr + "/patternProperties/" + E.pointer_escape(p))
+               for f_ in n.dtype.fields for p, s in subs.items()
+               if _py_key_search(p, f_.name)]
+        n.oks.append(n.guard(_all(oks)))
+        return
+    # runtime keys: per-entry sub-validation with /m/<key> paths
+    # (`jesse_validator_draft3.erl` check_pattern_properties) — key
+    # match via vetted Java regex inside a map-entry lambda
+    oks = []
+    for p, s in subs.items():
+        _require_vetted_key_pattern(p)
+        jp = java_vetted_pattern(p)
+        oks.append(n.each_entry(
+            s, n.sptr + "/patternProperties/" + E.pointer_escape(p),
+            lambda k, jp=jp: k.rlike(jp)))
+    n.oks.append(n.guard(_all(oks)))
+
+
+def _additional_properties(n: _Node, kw: str, arg: Any) -> None:
+    if not (arg is False or isinstance(arg, dict)) or not n.is_object:
+        return
+    sptr = n.sptr + "/additionalProperties"
+    if isinstance(n.dtype, StructType):
+        oks = []
+        for f_ in _struct_extras(n.schema, n.dtype):
+            child, seg = n.field(f_.name), "/" + E.pointer_escape(f_.name)
+            if arg is False:
+                # one violation per extra property, property name on
+                # the path (kernel _check_additional_properties)
+                oks.append(child.isNull())
+                n.fail(n.present(child.isNotNull()),
+                       E.NO_EXTRA_PROPERTIES_ALLOWED, sptr, seg=seg,
+                       detail=f_.name)
+            else:
+                oks.append(n.sub(arg, child, f_.dataType, seg, sptr))
+        n.oks.append(n.guard(_all(oks)))
+        return
+    known = list((n.schema.get("properties") or {}).keys())
+    patterns = list((n.schema.get("patternProperties") or {}).keys())
+    for p in patterns:
+        _require_vetted_key_pattern(p)
+
+    def is_extra(k: Column) -> Column:
+        cond = ~k.isin(known) if known else F.lit(True)
+        for p in patterns:
+            cond = cond & ~k.rlike(java_vetted_pattern(p))
+        return cond
+
+    if isinstance(arg, dict):
+        n.oks.append(n.guard(n.each_entry(arg, sptr, is_extra)))
+        return
+    entries = F.map_entries(n.value)
+    n.oks.append(n.guard(F.forall(
+        entries, lambda e: ~is_extra(e.getField("key")))))
+    if n.at:
+        n.arrays.append(F.coalesce(F.array_compact(F.transform(
+            entries,
+            lambda e: F.when(is_extra(e.getField("key")), _viol(
+                E.NO_EXTRA_PROPERTIES_ALLOWED,
+                F.concat(_path_col(n.path), F.lit("/"),
+                         _escape_key_col(e.getField("key"))),
+                sptr, n.vj, detail=e.getField("key"))))),
+            _empty_violations()))
+
+
+# keyword → (the one draft it belongs to, or None for both; handler).
+# The draft3 reference skips keywords it does not know
+# (`jesse_validator_draft3.erl:190-191`), so draft4's combinators and
+# min/maxProperties are vacuous there; ``format`` and unknown keywords
+# are vacuous everywhere.
+_KEYWORDS = {
+    "type": (None, _type),
+    "disallow": (E.DRAFT3, _disallow),
+    "enum": (None, _enum),
+    "minimum": (None, _one_row(E.NOT_IN_RANGE, _NUMERIC, _bound)),
+    "maximum": (None, _one_row(E.NOT_IN_RANGE, _NUMERIC, _bound)),
+    "divisibleBy": (E.DRAFT3, _one_row(
+        E.NOT_DIVISIBLE, _NUMERIC,
+        lambda n, kw, arg: _divisible_exact(n.value, arg))),
+    "multipleOf": (E.DRAFT4, _one_row(
+        E.NOT_DIVISIBLE, _NUMERIC,
+        lambda n, kw, arg: _multiple_of(n.value, arg))),
+    "minLength": (None, _one_row(
+        E.WRONG_LENGTH, StringType,
+        lambda n, kw, arg: F.length(n.value) >= F.lit(arg))),
+    "maxLength": (None, _one_row(E.WRONG_LENGTH, StringType, _max_length)),
+    "pattern": (None, _one_row(
+        E.NO_MATCH, StringType,
+        lambda n, kw, arg: _pattern_predicate(arg, n.value, n.ctx))),
+    "minItems": (None, _one_row(
+        E.WRONG_SIZE, ArrayType,
+        lambda n, kw, arg: F.size(n.value) >= F.lit(arg))),
+    "maxItems": (None, _one_row(
+        E.WRONG_SIZE, ArrayType,
+        lambda n, kw, arg: F.size(n.value) <= F.lit(arg))),
+    "uniqueItems": (None, _one_row(
+        E.NOT_UNIQUE, ArrayType,
+        lambda n, kw, arg: F.size(F.array_distinct(n.value))
+        == F.size(n.value) if arg is True else None)),
+    "minProperties": (E.DRAFT4, _one_row(
+        E.WRONG_SIZE, _OBJECT,
+        lambda n, kw, arg: _property_count(n) >= F.lit(arg))),
+    "maxProperties": (E.DRAFT4, _one_row(
+        E.WRONG_SIZE, _OBJECT,
+        lambda n, kw, arg: _property_count(n) <= F.lit(arg))),
+    "items": (None, _items),
+    "properties": (None, _properties),
+    # draft3 marks required properties inside ``properties``
+    "required": (E.DRAFT4, _required),
+    "dependencies": (None, _dependencies),
+    "patternProperties": (None, _pattern_properties),
+    "additionalProperties": (None, _additional_properties),
+    "allOf": (E.DRAFT4, _all_of),
+    "extends": (E.DRAFT3, _all_of),
+    "anyOf": (E.DRAFT4, _any_of),
+    "oneOf": (E.DRAFT4, _any_of),
+    "not": (E.DRAFT4, _not),
+}
+
+
+# ---------------------------------------------------------------------------
+# the compiled plan
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -863,14 +1074,10 @@ class CompiledPlan:
     row_gate: Optional[Column] = None  # true ⇒ row is valid (fast path)
 
     def violations_column(self) -> Column:
-        parts: list[Column] = []
-        if self.checks:
-            parts.append(F.array_compact(F.array(*self.checks)))
-        parts.extend(self.array_checks)
-        if not parts:
+        if not self.checks and not self.array_checks:
             return _empty_violations()
-        out = parts[0] if len(parts) == 1 else F.concat(*parts)
-        out = F.coalesce(out, _empty_violations())
+        out = F.coalesce(_pack(self.checks, self.array_checks),
+                         _empty_violations())
         if self.row_gate is not None:
             # row-level short circuit: valid rows (the overwhelming
             # majority at scale) evaluate only the boolean predicate —
@@ -882,513 +1089,11 @@ class CompiledPlan:
 
 def compile_plan(schema: dict, struct_type: StructType, *,
                  draft: str = E.DRAFT4, registry=None) -> CompiledPlan:
-    """Compile an object schema against a DataFrame's StructType. Top-level
-    ``properties`` map to columns; everything else composes recursively."""
+    """Compile an object schema against a DataFrame's StructType. The
+    root node is the row: its ``properties`` bind the top-level
+    columns, and its ok predicate is the row gate."""
     draft = E.normalize_draft(draft)
     ctx = CompileContext(draft=draft, registry=registry, root_schema=schema)
-    plan = CompiledPlan(schema=schema, draft=draft)
-    root = _deref(ctx, schema)
-    by_name = {f_.name: f_ for f_ in struct_type.fields}
-    draft3 = draft == E.DRAFT3
-
-    handled = ("type", "properties") if draft3 \
-        else ("type", "properties", "required")
-    for kw, arg in root.items():
-        if kw == "properties" and isinstance(arg, dict):
-            for name, sub in arg.items():
-                if not isinstance(sub, dict):
-                    continue
-                fld = by_name.get(name)
-                sptr = "/properties/" + E.pointer_escape(name)
-                if fld is None:
-                    if draft3 and sub.get("required") is True:
-                        plan.checks.append(_viol(
-                            E.MISSING_REQUIRED_PROPERTY, F.lit(""), sptr,
-                            F.lit(""), detail=name))
-                    continue
-                col = F.col(name)
-                if draft3 and sub.get("required") is True:
-                    plan.checks.append(F.when(col.isNull(), _viol(
-                        E.MISSING_REQUIRED_PROPERTY, F.lit(""), sptr,
-                        F.lit(""), detail=name)))
-                s, a = _compile_checks(
-                    sub, col, fld.dataType,
-                    F.lit("/" + E.pointer_escape(name)), sptr, ctx, 0)
-                plan.checks.extend(s)
-                plan.array_checks.extend(a)
-        elif kw == "required" and not draft3 and isinstance(arg, list):
-            for name in arg:
-                sptr = "/required"
-                if name in by_name:
-                    plan.checks.append(F.when(F.col(name).isNull(), _viol(
-                        E.MISSING_REQUIRED_PROPERTY, F.lit(""), sptr,
-                        F.lit(""), detail=name)))
-                else:
-                    plan.checks.append(_viol(
-                        E.MISSING_REQUIRED_PROPERTY, F.lit(""), sptr,
-                        F.lit(""), detail=name))
-    if any(kw not in handled for kw in root):
-        # whole-row keywords (dependencies / combinators / pattern- and
-        # additionalProperties over the row struct): compile through the
-        # full sub-error-propagating checks path with the root schema
-        # visible for sibling lookups — per-keyword predicate collapsing
-        # here is what the differential fuzz suite caught in round 3
-        row = F.struct(*[F.col(f_.name) for f_ in struct_type.fields])
-        s, a = _compile_checks(root, row, struct_type, F.lit(""), "",
-                               ctx, 0, skip=handled)
-        plan.checks.extend(s)
-        plan.array_checks.extend(a)
-    try:
-        plan.row_gate = _row_gate(root, struct_type, ctx)
-    except CompileError:
-        plan.row_gate = None
-    return plan
-
-
-def _row_gate(root: dict, struct_type: StructType,
-              ctx: CompileContext) -> Column:
-    """Pure boolean row predicate mirroring ``compile_plan``'s check
-    branches — true ⇔ the row produces no violations. Used as the
-    row-level short circuit in ``CompiledPlan.violations_column``."""
-    by_name = {f_.name: f_ for f_ in struct_type.fields}
-    draft3 = ctx.draft == E.DRAFT3
-    gate = _true()
-    for kw, arg in root.items():
-        if kw == "properties" and isinstance(arg, dict):
-            for name, sub in arg.items():
-                if not isinstance(sub, dict):
-                    continue
-                fld = by_name.get(name)
-                if fld is None:
-                    if draft3 and sub.get("required") is True:
-                        gate = gate & F.lit(False)
-                    continue
-                col = F.col(name)
-                gate = gate & F.coalesce(
-                    compile_predicate(sub, col, fld.dataType, ctx),
-                    F.lit(True))
-                if draft3 and sub.get("required") is True:
-                    gate = gate & col.isNotNull()
-        elif kw == "required" and not draft3 and isinstance(arg, list):
-            for name in arg:
-                gate = gate & (F.col(name).isNotNull()
-                               if name in by_name else F.lit(False))
-        elif kw == "type":
-            continue
-        else:
-            row = F.struct(*[F.col(f_.name) for f_ in struct_type.fields])
-            p = _keyword_predicate(kw, arg, root, row, struct_type, ctx, 0)
-            if p is not None:
-                gate = gate & F.coalesce(p, F.lit(True))
-    return gate
-
-
-# keywords whose violation is one row when ``_keyword_predicate`` fails
-# (the predicate also carries each keyword's dtype/draft applicability)
-_SCALAR_ATOMS = {
-    "type": E.WRONG_TYPE,
-    "enum": E.NOT_IN_RANGE,
-    "minimum": E.NOT_IN_RANGE,
-    "maximum": E.NOT_IN_RANGE,
-    "divisibleBy": E.NOT_DIVISIBLE,
-    "multipleOf": E.NOT_DIVISIBLE,
-    "minLength": E.WRONG_LENGTH,
-    "maxLength": E.WRONG_LENGTH,
-    "pattern": E.NO_MATCH,
-    "minItems": E.WRONG_SIZE,
-    "maxItems": E.WRONG_SIZE,
-    "uniqueItems": E.NOT_UNIQUE,
-    "minProperties": E.WRONG_SIZE,
-    "maxProperties": E.WRONG_SIZE,
-    "anyOf": E.ANY_SCHEMAS_NOT_VALID,
-    "oneOf": E.NOT_ONE_SCHEMA_VALID,
-    "not": E.NOT_SCHEMA_VALID,
-    "disallow": E.NOT_ALLOWED,
-}
-
-
-def _compile_checks(schema: dict, value: Column, dtype: DataType,
-                    path: Column, sptr: str, ctx: CompileContext,
-                    depth: int,
-                    skip: tuple = ()) -> tuple[list[Column], list[Column]]:
-    """Violation-emitting compile for one value/schema pair. Returns
-    (scalar checks, array checks) — scalar = viol-struct-or-null Column.
-    ``skip`` names keywords the caller already compiled (root-level
-    properties/required in ``compile_plan``) while keeping the full
-    schema visible for sibling lookups (additionalProperties extras)."""
-    if depth > 48:
-        raise CompileError("schema nesting too deep")
-    schema = _deref(ctx, schema)
-    scalars: list[Column] = []
-    arrays: list[Column] = []
-    draft3 = ctx.draft == E.DRAFT3
-    vj = _value_json(value, dtype)
-
-    def add(kw: str, atom: str, pred: Column, v: Column = None) -> None:
-        scalars.append(F.when(~F.coalesce(pred, F.lit(True)),
-                              _viol(atom, path, sptr + "/" + kw,
-                                    vj if v is None else v)))
-
-    for kw, arg in schema.items():
-        if kw in skip:
-            continue
-        if kw in _SCALAR_ATOMS:
-            # one violation when the keyword's predicate fails
-            p = _keyword_predicate(kw, arg, schema, value, dtype, ctx, depth)
-            if p is not None:
-                add(kw, _SCALAR_ATOMS[kw], p)
-        elif kw == "items" and isinstance(dtype, ArrayType) \
-                and isinstance(arg, dict):
-            arrays.append(_items_violations(arg, value, dtype, path,
-                                            sptr + "/items", ctx, depth))
-        elif kw == "items" and isinstance(dtype, ArrayType) \
-                and isinstance(arg, list):
-            s2, a2 = _tuple_items_checks(arg, schema, value, dtype, path,
-                                         sptr, vj, ctx, depth)
-            scalars.extend(s2)
-            arrays.extend(a2)
-        elif kw == "properties" and isinstance(arg, dict) \
-                and isinstance(dtype, StructType):
-            for name, sub in arg.items():
-                if not isinstance(sub, dict):
-                    continue
-                fld = next((f_ for f_ in dtype.fields if f_.name == name),
-                           None)
-                child_sptr = sptr + "/properties/" + E.pointer_escape(name)
-                if fld is None:
-                    if draft3 and sub.get("required") is True:
-                        scalars.append(F.when(value.isNotNull(), _viol(
-                            E.MISSING_REQUIRED_PROPERTY, path, child_sptr,
-                            vj, detail=name)))
-                    continue
-                child = value.getField(name)
-                child_path = F.concat(
-                    path, F.lit("/" + E.pointer_escape(name)))
-                if draft3 and sub.get("required") is True:
-                    scalars.append(F.when(
-                        value.isNotNull() & child.isNull(), _viol(
-                            E.MISSING_REQUIRED_PROPERTY, path, child_sptr,
-                            vj, detail=name)))
-                s, a = _compile_checks(sub, child, fld.dataType, child_path,
-                                       child_sptr, ctx, depth + 1)
-                scalars.extend(s)
-                arrays.extend(a)
-        elif kw == "properties" and isinstance(arg, dict) \
-                and isinstance(dtype, MapType):
-            for name, sub in arg.items():
-                if not isinstance(sub, dict):
-                    continue
-                child = F.element_at(value, F.lit(name))
-                child_path = F.concat(
-                    path, F.lit("/" + E.pointer_escape(name)))
-                child_sptr = sptr + "/properties/" + E.pointer_escape(name)
-                if draft3 and sub.get("required") is True:
-                    scalars.append(F.when(
-                        value.isNotNull() & ~F.coalesce(
-                            F.map_contains_key(value, F.lit(name)),
-                            F.lit(False)),
-                        _viol(E.MISSING_REQUIRED_PROPERTY, path, child_sptr,
-                              vj, detail=name)))
-                s, a = _compile_checks(sub, child, dtype.valueType,
-                                       child_path, child_sptr, ctx,
-                                       depth + 1)
-                scalars.extend(s)
-                arrays.extend(a)
-        elif kw == "required" and not draft3 and isinstance(arg, list) \
-                and isinstance(dtype, StructType):
-            names = {f_.name for f_ in dtype.fields}
-            for name in arg:
-                if name in names:
-                    cond = value.isNotNull() \
-                        & value.getField(name).isNull()
-                else:
-                    cond = value.isNotNull()
-                scalars.append(F.when(cond, _viol(
-                    E.MISSING_REQUIRED_PROPERTY, path, sptr + "/required",
-                    vj, detail=name)))
-        elif kw == "required" and not draft3 and isinstance(arg, list) \
-                and isinstance(dtype, MapType):
-            for name in arg:
-                scalars.append(F.when(
-                    value.isNotNull() & ~F.coalesce(
-                        F.map_contains_key(value, F.lit(name)),
-                        F.lit(False)),
-                    _viol(E.MISSING_REQUIRED_PROPERTY, path,
-                          sptr + "/required", vj, detail=name)))
-        elif kw == "patternProperties" and isinstance(arg, dict) \
-                and isinstance(dtype, StructType):
-            # static field names: compile-time Python-re match — exact
-            # kernel/jesse semantics, no vetting needed
-            for f_ in dtype.fields:
-                for pattern, sub in arg.items():
-                    if not isinstance(sub, dict) \
-                            or not _py_key_search(pattern, f_.name):
-                        continue
-                    child_path = F.concat(
-                        path, F.lit("/" + E.pointer_escape(f_.name)))
-                    psptr = (sptr + "/patternProperties/"
-                             + E.pointer_escape(pattern))
-                    s, a = _compile_checks(sub, value.getField(f_.name),
-                                           f_.dataType, child_path, psptr,
-                                           ctx, depth + 1)
-                    scalars.extend(s)
-                    arrays.extend(a)
-        elif kw == "patternProperties" and isinstance(arg, dict) \
-                and isinstance(dtype, MapType):
-            # runtime keys: per-entry sub-validation with /m/<key> paths
-            # (`jesse_validator_draft3.erl` check_pattern_properties) —
-            # key match via vetted Java regex inside a map-entry lambda
-            for pattern, sub in arg.items():
-                if not isinstance(sub, dict):
-                    continue
-                _require_vetted_key_pattern(pattern)
-                jp = java_vetted_pattern(pattern)
-                psptr = (sptr + "/patternProperties/"
-                         + E.pointer_escape(pattern))
-                arrays.append(_map_entry_violations(
-                    sub, value, dtype, path, psptr, ctx, depth,
-                    key_gate=lambda k, _jp=jp: k.rlike(_jp)))
-        elif kw == "additionalProperties" and isinstance(dtype, StructType) \
-                and (arg is False or isinstance(arg, dict)):
-            ap_sptr = sptr + "/additionalProperties"
-            for f_ in _struct_extras(schema, dtype):
-                child = value.getField(f_.name)
-                child_path = F.concat(
-                    path, F.lit("/" + E.pointer_escape(f_.name)))
-                if arg is False:
-                    # one violation per extra property, property name on
-                    # the path (kernel _check_additional_properties)
-                    scalars.append(F.when(
-                        value.isNotNull() & child.isNotNull(),
-                        _viol(E.NO_EXTRA_PROPERTIES_ALLOWED, child_path,
-                              ap_sptr, vj, detail=f_.name)))
-                else:
-                    s, a = _compile_checks(arg, child, f_.dataType,
-                                           child_path, ap_sptr, ctx,
-                                           depth + 1)
-                    scalars.extend(s)
-                    arrays.extend(a)
-        elif kw == "additionalProperties" and isinstance(dtype, MapType) \
-                and (arg is False or isinstance(arg, dict)):
-            ap_sptr = sptr + "/additionalProperties"
-            known = list((schema.get("properties") or {}).keys())
-            patterns = list((schema.get("patternProperties") or {}).keys())
-            for p in patterns:
-                _require_vetted_key_pattern(p)
-
-            def _is_extra(k: Column) -> Column:
-                cond = ~k.isin(known) if known else F.lit(True)
-                for p in patterns:
-                    cond = cond & ~k.rlike(java_vetted_pattern(p))
-                return cond
-
-            if arg is False:
-                arrays.append(F.coalesce(F.array_compact(F.transform(
-                    F.map_entries(value),
-                    lambda e: F.when(_is_extra(e.getField("key")), _viol(
-                        E.NO_EXTRA_PROPERTIES_ALLOWED,
-                        F.concat(path, F.lit("/"),
-                                 _escape_key_col(e.getField("key"))),
-                        ap_sptr, vj, detail=e.getField("key"))))),
-                    _empty_violations()))
-            else:
-                arrays.append(_map_entry_violations(
-                    arg, value, dtype, path, ap_sptr, ctx, depth,
-                    key_gate=_is_extra))
-        elif kw == "dependencies" and isinstance(arg, dict) \
-                and isinstance(dtype, (StructType, MapType)):
-            field_names = {f_.name for f_ in dtype.fields} \
-                if isinstance(dtype, StructType) else None
-
-            def _has(name: str) -> Column:
-                if field_names is not None:
-                    if name in field_names:
-                        return F.coalesce(
-                            value.getField(name).isNotNull(), F.lit(False))
-                    return F.lit(False)
-                return F.coalesce(F.map_contains_key(value, F.lit(name)),
-                                  F.lit(False))
-
-            def _dep_schema_checks(dep_schema: dict, dep_name: str,
-                                   trigger: Column, dep_sptr: str) -> None:
-                # draft3 pushes the dependency name on the instance path
-                # (check_value(DependencyName, ...), reference :600-605);
-                # draft4 validates at the object's own path
-                dpath = F.concat(
-                    path, F.lit("/" + E.pointer_escape(dep_name))) \
-                    if draft3 else path
-                s, a = _compile_checks(dep_schema, value, dtype, dpath,
-                                       dep_sptr, ctx, depth + 1)
-                scalars.extend(F.when(trigger, c) for c in s)
-                arrays.extend(
-                    F.when(trigger, x).otherwise(_empty_violations())
-                    for x in a)
-
-            for dep_name, dep in arg.items():
-                trigger = value.isNotNull() & _has(dep_name)
-                dep_sptr = (sptr + "/dependencies/"
-                            + E.pointer_escape(dep_name))
-                members = [dep] if isinstance(dep, str) \
-                    else dep if isinstance(dep, list) else None
-                if members is not None:
-                    # one missing_dependency PER missing name
-                    # (check_dependency_array folds per member)
-                    for member in members:
-                        if isinstance(member, str):
-                            scalars.append(F.when(
-                                trigger & ~_has(member),
-                                _viol(E.MISSING_DEPENDENCY, path, dep_sptr,
-                                      vj, detail=member)))
-                        elif isinstance(member, dict) and draft3:
-                            _dep_schema_checks(member, dep_name, trigger,
-                                               dep_sptr)
-                elif isinstance(dep, dict):
-                    _dep_schema_checks(dep, dep_name, trigger, dep_sptr)
-                else:
-                    raise CompileError("wrong_type_dependency in schema")
-        elif kw == "extends" and draft3:
-            # full sub-error propagation at the same instance path
-            # (kernel _descend(ctx, None, ["extends"], ...))
-            subs = [(None, arg)] if isinstance(arg, dict) else \
-                list(enumerate(arg)) if isinstance(arg, list) else []
-            for i, sub in subs:
-                if not isinstance(sub, dict):
-                    continue
-                esptr = sptr + "/extends" + ("" if i is None else f"/{i}")
-                s, a = _compile_checks(sub, value, dtype, path, esptr, ctx,
-                                       depth + 1)
-                scalars.extend(s)
-                arrays.extend(a)
-        elif kw == "allOf" and not draft3 and isinstance(arg, list):
-            # allOf propagates each subschema's own violations (kernel
-            # _validate_draft4 descends per member, no collapsing)
-            for i, sub in enumerate(arg):
-                if not isinstance(sub, dict):
-                    continue
-                s, a = _compile_checks(sub, value, dtype, path,
-                                       sptr + f"/allOf/{i}", ctx, depth + 1)
-                scalars.extend(s)
-                arrays.extend(a)
-        # format and unknown keywords: vacuous
-    return scalars, arrays
-
-
-def _map_entry_violations(sub: dict, value: Column, dtype: MapType,
-                          path: Column, sptr: str, ctx: CompileContext,
-                          depth: int, key_gate=None) -> Column:
-    """Per-entry violations for a map column: each entry whose key
-    passes ``key_gate`` is validated against ``sub`` at path
-    ``<map>/<escaped-key>`` — the expression twin of the kernel's
-    per-property descend for patternProperties / schema-valued
-    additionalProperties. Fully JVM-side (map_entries + transform)."""
-    from dataclasses import replace as _replace
-    lctx = ctx if ctx.in_lambda else _replace(ctx, in_lambda=True)
-
-    def per_entry(e: Column) -> Column:
-        k = e.getField("key")
-        epath = F.concat(path, F.lit("/"), _escape_key_col(k))
-        s, a = _compile_checks(sub, e.getField("value"), dtype.valueType,
-                               epath, sptr, lctx, depth + 1)
-        parts: list[Column] = []
-        if s:
-            parts.append(F.array_compact(F.array(*s)))
-        parts.extend(a)
-        if not parts:
-            return _empty_violations()
-        built = parts[0] if len(parts) == 1 else F.concat(*parts)
-        if key_gate is None:
-            return built
-        return F.when(key_gate(k), built).otherwise(_empty_violations())
-
-    return F.coalesce(
-        F.flatten(F.transform(F.map_entries(value), per_entry)),
-        _empty_violations())
-
-
-def _tuple_items_checks(subs: list, schema: dict, value: Column,
-                        dtype: ArrayType, path: Column, sptr: str,
-                        vj: Column, ctx: CompileContext,
-                        depth: int) -> tuple[list[Column], list[Column]]:
-    """Violation-emitting tuple-form items — same semantics as
-    ``_tuple_items_predicate`` with per-index pointer paths
-    (0-based indices, `jesse_schema_validator_tests.erl:107-135`)."""
-    n = len(subs)
-    size = F.size(value)
-    additional = schema.get("additionalItems")
-    elem_type = dtype.elementType
-    draft3 = ctx.draft == E.DRAFT3
-    scalars: list[Column] = []
-    arrays: list[Column] = []
-    present = value.isNotNull()
-
-    if draft3:
-        scalars.append(F.when(present & (size < n), _viol(
-            E.NOT_ENOUGHT_ITEMS, path, sptr + "/items", vj)))
-        prefix_active = (size == n) | \
-            ((size > n) & F.lit(isinstance(additional, dict)))
-    else:
-        prefix_active = F.lit(True)
-    if additional is False:
-        scalars.append(F.when(present & (size > n), _viol(
-            E.NO_EXTRA_ITEMS_ALLOWED, path, sptr + "/additionalItems", vj)))
-
-    for i, sub in enumerate(subs):
-        if not isinstance(sub, dict):
-            continue
-        child = F.get(value, i)
-        child_path = F.concat(path, F.lit(f"/{i}"))
-        s, a = _compile_checks(sub, child, elem_type, child_path,
-                               sptr + f"/items/{i}", ctx, depth + 1)
-        scalars.extend(F.when(prefix_active, chk) for chk in s)
-        arrays.extend(
-            F.when(prefix_active, arr).otherwise(_empty_violations())
-            for arr in a)
-
-    if isinstance(additional, dict):
-        extras = F.slice(value, n + 1, F.greatest(size - n, F.lit(0)))
-        arrays.append(F.when(
-            present & (size > n),
-            _items_violations(additional, extras, dtype, path,
-                              sptr + "/additionalItems", ctx, depth,
-                              index_offset=n)
-        ).otherwise(_empty_violations()))
-    return scalars, arrays
-
-
-def _items_violations(item_schema: dict, value: Column, dtype: ArrayType,
-                      path: Column, sptr: str, ctx: CompileContext,
-                      depth: int, index_offset: int = 0) -> Column:
-    """Per-element violations with dynamic 0-based pointer indices —
-    jesse pushes the index per element (`jesse_validator_draft3.erl:488-503`);
-    we build it inside a transform lambda, still fully JVM-side."""
-    from dataclasses import replace as _replace
-    elem_type = dtype.elementType
-    lctx = ctx if ctx.in_lambda else _replace(ctx, in_lambda=True)
-
-    # short-circuit gate (SURVEY.md §4.2): evaluate the allocation-free
-    # boolean predicate first and only build violation structs/arrays
-    # for FAILING elements. At ~10 checks/span this removes ~all array
-    # allocation from the valid-data hot path — validation becomes
-    # compute-bound instead of GC-bound, which is what lets throughput
-    # scale with cores.
-    def per_element(x: Column, i: Column) -> Column:
-        elem_path = F.concat(path, F.lit("/"),
-                             (i + F.lit(index_offset)).cast("string"))
-        s, a = _compile_checks(item_schema, x, elem_type, elem_path, sptr,
-                               lctx, depth + 1)
-        parts: list[Column] = []
-        if s:
-            parts.append(F.array_compact(F.array(*s)))
-        parts.extend(a)
-        if not parts:
-            return _empty_violations()
-        built = parts[0] if len(parts) == 1 else F.concat(*parts)
-        try:
-            ok = F.coalesce(compile_predicate(item_schema, x, elem_type,
-                                              lctx, depth + 1), F.lit(True))
-        except CompileError:
-            return built  # no gate: every element builds its array
-        return F.when(ok, _empty_violations()).otherwise(built)
-
-    nested = F.transform(value, per_element)
-    return F.coalesce(F.flatten(nested), _empty_violations())
+    gate, checks, arrays = _walk(schema, None, struct_type, ctx, 0, ("", ""))
+    return CompiledPlan(schema=schema, draft=draft, checks=checks,
+                        array_checks=arrays, row_gate=gate)

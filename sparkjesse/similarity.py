@@ -76,8 +76,8 @@ def _cosine_pairs_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     yields null — don't feed element-null embeddings to the arrow
     impl. A ZERO-NORM vector yields NULL on both paths: the NaN this
     kernel computes surfaces as NA through the Float64 extension
-    array, matching ``cosine_col``'s zero-norm CaseWhen guard
-    (test-pinned)."""
+    array, matching ``cosine_col``, whose ``try_divide`` returns NULL
+    on a zero norm (test-pinned)."""
     n = len(a)
     out = np.full(n, np.nan)
     valid = np.empty(n, dtype=bool)

@@ -214,3 +214,36 @@ def test_max_length_counts_characters_not_bytes(spark, ch, draft):
         assert got[doc_id] == (not errs, sorted(
             (e.error_type, e.path) for e in errs)), (doc_id, s)
     assert [d for d, (ok, _) in sorted(got.items()) if not ok] == [2, 6]
+
+
+@pytest.mark.parametrize("schema,draft", [
+    ({"type": "string"}, E.DRAFT4),
+    ({"type": "array", "items": {"type": "integer"}, "minItems": 1},
+     E.DRAFT4),
+    ({"type": ["string", "null"]}, E.DRAFT3),
+    ({"type": "object", "properties": {"n_chars": {"type": "integer"}}},
+     E.DRAFT4),
+], ids=["string", "array", "string-or-null", "object"])
+def test_root_type_checked_on_typed_path(docs_df, schema, draft):
+    """The root ``type`` applies to the row itself (an object): the
+    typed path reports what the JSON kernel reports over the same
+    rows, and a root ``"object"`` leaves every row valid."""
+    eng = ValidationEngine(default_draft=draft)
+    typed = eng.validate(docs_df, schema, draft=draft).annotated
+    jdf = docs_df.withColumn(
+        "j", F.to_json(F.struct(*[F.col(c) for c in docs_df.columns])))
+    kernel = eng.validate_json(jdf, "j", schema, draft=draft).annotated
+
+    def outcome(df):
+        return {r["doc_id"]: sorted(
+            (v["error_type"], v["path"], v["schema_ptr"])
+            for v in r["violations"])
+            for r in df.select("doc_id", "violations").collect()}
+
+    got = outcome(typed)
+    assert got == outcome(kernel)
+    if schema["type"] == "object":
+        assert not any(got.values())
+    else:
+        assert all(v == [(E.WRONG_TYPE, "", "/type")]
+                   for v in got.values())

@@ -3,7 +3,10 @@ decontaminate -> encode -> range-sorted write, over the sf0.001 table."""
 from __future__ import annotations
 
 import json
+import os
 import sys
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -246,3 +249,35 @@ def test_pipeline_job_selection_stages(spark, tmp_path, monkeypatch):
     assert stats["after_semdedup"] < stats["after_dsir"]
     assert stats["written"] == stats["after_semdedup"]
     assert spark.read.parquet(out + "/docs").count() == stats["written"]
+
+
+@pytest.mark.parametrize("flags,message", [
+    (["--dsir-keep", "0.5"], "--dsir-keep requires --dsir-target"),
+    (["--dsir-target", "TGT"], "--dsir-keep in (0, 1)"),
+    (["--dsir-target", "TGT", "--dsir-keep", "1.0"], "--dsir-keep in (0, 1)"),
+    (["--dsir-target", "TGT", "--dsir-keep", "0"], "--dsir-keep in (0, 1)"),
+    (["--semdedup", "4"], "'embedding' column"),
+], ids=["keep-no-target", "target-no-keep", "keep-1", "keep-0",
+        "semdedup-no-embedding"])
+def test_pipeline_job_requested_stage_fails_loudly(
+        spark, tmp_path, monkeypatch, capsys, flags, message):
+    """A requested selection stage that cannot run stops the job with a
+    usage error before anything is written — it is never skipped
+    silently."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..",
+                                    "tools"))
+    import pipeline_job
+
+    tgt = str(tmp_path / "tgt")
+    spark.range(4).select(F.col("id").alias("doc_id"),
+                          F.lit("a b c").alias("text")).write.parquet(tgt)
+    out = tmp_path / "out"
+    monkeypatch.setattr(sys, "argv", [
+        "pipeline_job.py", "--input", tgt, "--output", str(out)]
+        + [tgt if f == "TGT" else f for f in flags])
+    with pytest.raises(SystemExit) as exc:
+        pipeline_job.main()
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err
+    assert not out.exists()
+    assert not (tmp_path / "out_stats.json").exists()

@@ -25,10 +25,15 @@ stays low — asserted < 20%.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import random
+from pathlib import Path
 
 import pytest
+
+from pyspark.sql import functions as F
 
 from sparkjesse import errors as E
 from sparkjesse.compiler import CompileError, compile_plan
@@ -334,22 +339,30 @@ def test_fuzz_catalyst_vs_kernel(spark, draft):
     eng = ValidationEngine(default_draft=draft)
     skipped = 0
     mismatches = []
+    gate_drift = []
     for case in range(N_CASES):
         schema = gen_schema(rng, draft)
         try:
-            compile_plan(schema, df.schema, draft=draft,
-                         registry=eng.registry)
+            plan = compile_plan(schema, df.schema, draft=draft,
+                                registry=eng.registry)
         except CompileError:
             skipped += 1  # engine would use the kernel — vacuous here
             continue
+        # the row gate must agree with the violations built without it
+        gate = F.coalesce(plan.row_gate, F.lit(True))
+        plan.row_gate = None
+        ungated_ok = F.size(plan.violations_column()) == 0
         res = eng.validate(df, schema, draft=draft)
         got = {}
-        for r in res.annotated.select("doc_id", "valid",
-                                      "violations").collect():
+        for r in res.annotated.select(
+                "doc_id", "valid", "violations", gate.alias("gate"),
+                ungated_ok.alias("ungated_ok")).collect():
             got[r["doc_id"]] = (
                 r["valid"],
                 sorted((v["error_type"], v["path"])
                        for v in r["violations"]))
+            if r["gate"] != r["ungated_ok"]:
+                gate_drift.append((case, r["doc_id"], schema))
         for doc_id, doc in docs.items():
             kv = validate_value(schema, doc, default_draft=draft)
             expect = (len(kv) == 0,
@@ -363,3 +376,59 @@ def test_fuzz_catalyst_vs_kernel(spark, draft):
     assert not mismatches, (
         f"{len(mismatches)} differential mismatches; first: "
         f"{mismatches[0]}")
+    assert not gate_drift, (
+        f"{len(gate_drift)} rows where the row gate disagrees with the "
+        f"ungated violations; first: {gate_drift[0]}")
+
+
+# ---------------------------------------------------------------------------
+# typed-path output snapshot
+# ---------------------------------------------------------------------------
+#
+# The differential run compares sorted (error_type, path) pairs only;
+# ``max_violations_per_doc`` slices the violations array by ORDER, and
+# schema_ptr / value_json / detail are typed-path outputs too. The
+# snapshot pins all of them on a fixed 40 cases per draft (the first 40
+# of the differential run, whatever SPARKJESSE_FUZZ_CASES says): per
+# case, a sha256 over every doc's ordered violations array, or
+# "CompileError" where the compiler rejects the schema. Regenerate the
+# fixture only for an intended output change:
+#   json.dump({d: _snapshot_digests(spark, d) for d in (E.DRAFT3,
+#              E.DRAFT4)}, open(SNAPSHOT, "w"), indent=1)
+
+SNAPSHOT_CASES = 40
+SNAPSHOT = Path(__file__).parent / "fixtures" / \
+    "typed_violations_snapshot.json"
+
+
+def _snapshot_digests(spark, draft: str) -> list:
+    rng = random.Random(SEED if draft == E.DRAFT3 else SEED + 1)
+    df = spark.createDataFrame(_make_rows(), ROW_SCHEMA).persist()
+    eng = ValidationEngine(default_draft=draft)
+    out = []
+    for _ in range(SNAPSHOT_CASES):
+        schema = gen_schema(rng, draft)
+        try:
+            compile_plan(schema, df.schema, draft=draft,
+                         registry=eng.registry)
+        except CompileError:
+            out.append("CompileError")
+            continue
+        rows = (eng.validate(df, schema, draft=draft).annotated
+                .select("doc_id", "violations").orderBy("doc_id")
+                .collect())
+        payload = json.dumps([[r["doc_id"], [list(v) for v in
+                                             r["violations"]]]
+                              for r in rows])
+        out.append(hashlib.sha256(payload.encode()).hexdigest())
+    df.unpersist()
+    return out
+
+
+@pytest.mark.parametrize("draft", [E.DRAFT3, E.DRAFT4])
+def test_typed_violation_snapshot(spark, draft):
+    expected = json.loads(SNAPSHOT.read_text())[draft]
+    got = _snapshot_digests(spark, draft)
+    changed = [i for i, (g, x) in enumerate(zip(got, expected)) if g != x]
+    assert len(got) == len(expected) and not changed, \
+        f"typed-path violations changed in cases {changed}"

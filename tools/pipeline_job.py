@@ -31,7 +31,7 @@ The standard LLM data-prep chain, every stage a sparkjesse operator:
      most-natural Q quantile under a corpus-trained bigram LM;
   5.7. (opt-in, ``--semdedup K``) SemDeDup semantic near-dup pruning
      (``selection.semantic_dedup`` over a
-     ``similarity.kmeans_codebook``) when the input carries an
+     ``similarity.kmeans_codebook``); the input must carry an
      ``embedding`` column;
   6. PII redaction (``scrub.redact_pii``) with an aggregate redaction
      count in the stats ledger — after dedup (identical PII spans must
@@ -40,6 +40,10 @@ The standard LLM data-prep chain, every stage a sparkjesse operator:
      ``encode_documents``);
   8. range-sorted parquet output (``sources.write_range_sorted``) so
      downstream consumers get zone-map-prunable, merge-ready files.
+
+A requested stage that cannot run (``--dsir-keep`` without
+``--dsir-target`` or outside (0, 1), ``--semdedup`` without an
+``embedding`` input column) fails before anything is written.
 
 With ``--url-col`` (a URL column present in the input), stage 2 also
 applies the host-cap filter (``urlops.host_cap_filter`` — anti-SEO-farm
@@ -101,8 +105,8 @@ def main() -> None:
                     help="parquet path of a trusted target corpus; "
                          "with --dsir-keep, importance-resample the "
                          "corpus toward it (selection.dsir_*)")
-    ap.add_argument("--dsir-keep", type=float, default=0.0, metavar="F",
-                    help="fraction kept by DSIR Gumbel top-k "
+    ap.add_argument("--dsir-keep", type=float, default=None, metavar="F",
+                    help="fraction in (0, 1) kept by DSIR Gumbel top-k "
                          "resampling (requires --dsir-target)")
     ap.add_argument("--semdedup", type=int, default=0, metavar="K",
                     help="opt-in SemDeDup with a K-cluster k-means "
@@ -115,6 +119,12 @@ def main() -> None:
                          "training order for epoch N via "
                          "sampling.epoch_shuffle)")
     args = ap.parse_args()
+    # a requested stage either runs or fails here, before any write
+    if args.dsir_keep is not None and not args.dsir_target:
+        ap.error("--dsir-keep requires --dsir-target")
+    if args.dsir_target and not (args.dsir_keep is not None
+                                 and 0.0 < args.dsir_keep < 1.0):
+        ap.error("--dsir-target requires --dsir-keep in (0, 1)")
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -125,6 +135,8 @@ def main() -> None:
     spark = SparkSession.builder.appName("sparkjesse-pipeline") \
         .getOrCreate()
     docs = spark.read.parquet(args.input)
+    if args.semdedup > 0 and "embedding" not in docs.columns:
+        ap.error("--semdedup requires an 'embedding' column in --input")
     stats: dict = {"input": docs.count()}
 
     # 1. reproducible sample
@@ -213,7 +225,7 @@ def main() -> None:
     # map-side-combined aggregations), scoring is a zero-shuffle
     # Arrow-UDF map, and the Gumbel-top-k cut is one approx-percentile
     # aggregate + a filter — the corpus never joins or shuffles
-    if args.dsir_target and 0.0 < args.dsir_keep < 1.0:
+    if args.dsir_target:
         target = spark.read.parquet(args.dsir_target)
         dsir = selection.dsir_model(target, docs)
         docs = selection.dsir_resample(docs, dsir, args.dsir_keep,
@@ -244,7 +256,7 @@ def main() -> None:
     # codebook map, the pairwise check shuffles once on the cluster
     # id, and survivors anti-join the dup-id set (same shape as the
     # SimHash stage-4 drop; AQE broadcasts it when small)
-    if args.semdedup > 0 and "embedding" in docs.columns:
+    if args.semdedup > 0:
         from sparkjesse import similarity
         cb = similarity.kmeans_codebook(
             docs, id_col="doc_id", n_centroids=args.semdedup)
