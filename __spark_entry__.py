@@ -611,10 +611,11 @@ def _pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _txt_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII signals + redaction in ONE oracle row (round-5 budget fold:
     the two queries shared the _PII_CHAIN pipeline; merging frees a
-    slot for the round-4 operator family). Both sides stay zero-
-    shuffle maps; the join is the result shape only."""
-    df = _pii_docs(spark, sf_dir)
-    return scrub.pii_signals(df).join(scrub.redact_pii(df), "doc_id")
+    slot for the round-4 operator family): one zero-shuffle select
+    over ``scrub.pii_cols``, no join."""
+    cols = scrub.pii_cols(F.col("text"))
+    return _pii_docs(spark, sf_dir).select(
+        "doc_id", *[c.alias(n) for n, c in cols.items()])
 
 
 def _url_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -643,13 +644,14 @@ def _web_hostcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (round-5 budget fold — host-cap already parses URLs, so the
     merged row pins url_components, canonical_urls AND
     host_cap_filter at once, freeing a slot for the round-4 operator
-    family)."""
-    df = _url_docs(spark, sf_dir)
-    comp = (urlops.url_components(df)
-            .join(urlops.canonical_urls(df), "doc_id"))
-    cap = (urlops.host_cap_filter(df, max_per_host=50)
-           .select("doc_id", "host_docs", "keep"))
-    return comp.join(cap, "doc_id")
+    family): one frame — parse, canonical key, cap verdict — whose
+    only joins are host_cap_filter's host-keyed aggregates."""
+    u = F.col("url")
+    parts = [c.alias(n) for n, c in urlops.url_cols(u).items()]
+    parsed = _url_docs(spark, sf_dir).select(
+        "doc_id", "url", *parts,
+        urlops.canonical_url_col(u).alias("canonical_url"))
+    return urlops.host_cap_filter(parsed, max_per_host=50).drop("url")
 
 
 # -- similarity search ------------------------------------------------------

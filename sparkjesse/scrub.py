@@ -27,6 +27,9 @@ surface alongside dedup/similarity/quality (SURVEY §2.6).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -44,15 +47,30 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def _sequential(text: Column) -> tuple[dict[str, Column], Column]:
-    """Shared fold: per-pattern counts on the progressively-redacted
-    text, plus the final redacted column."""
-    counts: dict[str, Column] = {}
+def pii_cols(text: Column) -> dict[str, Column]:
+    """Every per-doc scrub output as named columns over one text
+    column, from ONE sequential fold: ``n_<pattern>`` per pattern
+    (counted on the progressively-redacted text), ``n_pii``,
+    ``has_pii``, ``redacted`` and ``n_redacted`` (the same total as
+    ``n_pii``, by construction). For callers that scrub IN PLACE or
+    want signals and redaction in one ``select`` — a pure per-row
+    expression never needs a join back on the id (which would shuffle
+    the corpus, drop null-id rows and multiply duplicate ids)."""
+    cols: dict[str, Column] = {}
     cur = text
     for name, pattern, placeholder in PII_PATTERNS:
-        counts[name] = F.regexp_count(cur, F.lit(pattern))
+        cols[f"n_{name}"] = F.regexp_count(cur, F.lit(pattern))
         cur = F.regexp_replace(cur, pattern, placeholder)
-    return counts, cur
+    total = reduce(operator.add, cols.values())
+    cols.update(n_pii=total, has_pii=total > 0, redacted=cur,
+                n_redacted=total)
+    return cols
+
+
+def _select(df: DataFrame, text_col: str, id_col: str,
+            names: list[str]) -> DataFrame:
+    cols = pii_cols(F.col(text_col))
+    return df.select(F.col(id_col), *[cols[n].alias(n) for n in names])
 
 
 def pii_signals(df: DataFrame, text_col: str = "text",
@@ -60,40 +78,20 @@ def pii_signals(df: DataFrame, text_col: str = "text",
     """Per-doc PII detection: ``(id, n_email, n_ssn, n_phone, n_ipv4,
     n_pii, has_pii)``. Counts follow the sequential contract above, so
     they sum to exactly what ``redact_pii`` would replace."""
-    counts, _ = _sequential(F.col(text_col))
-    total = None
-    for name in counts:
-        total = counts[name] if total is None else total + counts[name]
-    return df.select(
-        F.col(id_col),
-        *[counts[name].alias(f"n_{name}") for name, _, _ in PII_PATTERNS],
-        total.alias("n_pii"),
-        (total > 0).alias("has_pii"))
+    return _select(df, text_col, id_col,
+                   [f"n_{name}" for name, _, _ in PII_PATTERNS]
+                   + ["n_pii", "has_pii"])
 
 
 def redact_pii(df: DataFrame, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """Per-doc redaction: ``(id, redacted, n_redacted)`` with every
     matched span replaced by its typed placeholder."""
-    counts, redacted = _sequential(F.col(text_col))
-    total = None
-    for name in counts:
-        total = counts[name] if total is None else total + counts[name]
-    return df.select(F.col(id_col), redacted.alias("redacted"),
-                     total.alias("n_redacted"))
+    return _select(df, text_col, id_col, ["redacted", "n_redacted"])
 
 
 def redact_cols(text: Column) -> tuple[Column, Column]:
-    """Column-level redaction: ``(redacted, n_redacted)`` expression
-    pair over any text column — for pipelines that want to scrub IN
-    PLACE with ``withColumn`` instead of joining ``redact_pii``'s
-    output back to the corpus (a corpus-wide shuffle that a pure
-    per-row expression never needs; an inner join on the id also
-    drops null-id rows and multiplies duplicate ids — round-3 ADVICE
-    on ``tools/pipeline_job.py``). Same sequential contract as
-    ``redact_pii``."""
-    counts, redacted = _sequential(text)
-    total = None
-    for name in counts:
-        total = counts[name] if total is None else total + counts[name]
-    return redacted, total
+    """Column-level redaction: the ``(redacted, n_redacted)`` pair of
+    :func:`pii_cols`, for ``withColumn`` scrubbing in place."""
+    cols = pii_cols(text)
+    return cols["redacted"], cols["n_redacted"]

@@ -137,8 +137,9 @@ def bucket_counts(df: DataFrame, text_col: str = "text", *,
     def hist(batches):
         counts = np.zeros(n_buckets, dtype=np.int64)
         for pdf in batches:
-            for t in pdf["__text__"]:
-                toks = (t or "").split(" ")
+            # NULL text has no grams (as explode over a NULL array)
+            for t in pdf["__text__"].dropna():
+                toks = t.split(" ")
                 grams = (list(toks) if include_unigrams else [])
                 grams += [f"{a} {b}" for a, b in zip(toks, toks[1:])]
                 for g in grams:
@@ -210,7 +211,8 @@ def dsir_weight_col(model: dict,
     def score(texts: pd.Series) -> pd.DataFrame:
         ng, th, rh, w = [], [], [], []
         for t in texts:
-            toks = (t or "").split(" ")
+            # NULL text has no grams: zero counts, weight 0.0
+            toks = [] if t is None else t.split(" ")
             grams = (list(toks) if include_uni else [])
             grams += [f"{a} {b}" for a, b in zip(toks, toks[1:])]
             idx = [int(hashlib.md5((salt + g).encode()).hexdigest()

@@ -399,47 +399,48 @@ def build_vocab(df: DataFrame, text_col: str = "text", *,
     return vocab.select("token", "token_id", "count")
 
 
-def encode_documents(df: DataFrame, vocab: DataFrame,
-                     text_col: str = "text",
-                     id_col: str = "doc_id", *,
-                     oov_id: int = -1) -> DataFrame:
-    """Encode each document as its token-id sequence:
-    ``(id, ids, n_oov)`` with order preserved and out-of-vocabulary
-    tokens mapped to ``oov_id``.
+def encode_col(vocab: DataFrame, text_col: Column | str = "text", *,
+               oov_id: int = -1) -> Column:
+    """Token-id encoding as a COLUMN — ``struct<ids, n_oov>`` over
+    ``text_col``: order preserved, out-of-vocabulary tokens mapped to
+    ``oov_id``, ``n_oov`` their count; NULL text encodes to NULL.
+    Attach it with ``withColumn`` (zero shuffle, no join back on the
+    id); :func:`encode_documents` is a select over it.
 
-    Scale shape: ZERO shuffle. The vocab is driver-collected (it is
-    small BY CONSTRUCTION — ``build_vocab`` caps it at ``max_size``;
-    a vocabulary is 10^4-10^6 rows, never corpus-sized) and shipped to
-    executors as a SparkContext broadcast dict inside an Arrow-batched
-    pandas UDF: each doc's token array maps to its id array in one
-    per-row pass, so order and length are invariants by construction
-    and the 10^12-token corpus never leaves its scan partitions.
-    (The previous posexplode → join → groupBy+array_sort(collect_list)
-    plan re-shuffled EVERY token occurrence — ~10^15 exchange rows at
-    the design point — to rebuild arrays that already existed per-row;
-    round-3 VERDICT "What's wrong #4".) ``n_oov`` counts ``oov_id``
-    occurrences in the encoded array, exact because vocab ids are
-    non-negative ranks (``build_vocab``) and ``oov_id`` is negative —
+    Scale shape: ZERO shuffle. The vocab is driver-collected (small BY
+    CONSTRUCTION — ``build_vocab`` caps it at ``max_size``) and shipped
+    to executors as a broadcast dict inside ONE Arrow-batched pandas
+    UDF, so each doc's tokens map to ids in one per-row pass and the
+    corpus never leaves its scan partitions. ``n_oov`` is exact because
+    vocab ids are non-negative ranks and ``oov_id`` is negative —
     asserted here so a custom vocab can't silently alias into OOV."""
     rows = vocab.select("token", "token_id").collect()
     mapping = {r["token"]: r["token_id"] for r in rows}
     assert all(tid != oov_id for tid in mapping.values()), \
         "vocab token_id collides with oov_id"
-    bc = df.sparkSession.sparkContext.broadcast(mapping)
+    bc = vocab.sparkSession.sparkContext.broadcast(mapping)
 
-    @F.pandas_udf("array<long>")
-    def _encode(toks: pd.Series) -> pd.Series:
+    @F.pandas_udf("struct<ids:array<long>, n_oov:long>")
+    def encode(toks: pd.Series) -> pd.DataFrame:
         m = bc.value
-        return toks.map(
-            lambda ts: None if ts is None
-            else [m.get(t, oov_id) for t in ts])
+        ids = [None if ts is None else [m.get(t, oov_id) for t in ts]
+               for ts in toks]
+        n_oov = [None if i is None else i.count(oov_id) for i in ids]
+        return pd.DataFrame({"ids": ids,
+                             "n_oov": pd.array(n_oov, dtype="Int64")})
 
-    enc = df.select(F.col(id_col),
-                    _encode(tokens_col(text_col)).alias("ids"))
-    return enc.select(
-        F.col(id_col), F.col("ids"),
-        F.size(F.filter("ids", lambda t: t == oov_id))
-         .cast("long").alias("n_oov"))
+    return encode(tokens_col(text_col))
+
+
+def encode_documents(df: DataFrame, vocab: DataFrame,
+                     text_col: str = "text",
+                     id_col: str = "doc_id", *,
+                     oov_id: int = -1) -> DataFrame:
+    """Encode each document as its token-id sequence: ``(id, ids,
+    n_oov)`` — :func:`encode_col` as a frame."""
+    enc = encode_col(vocab, text_col, oov_id=oov_id)
+    return df.select(F.col(id_col), enc.getField("ids").alias("ids"),
+                     enc.getField("n_oov").alias("n_oov"))
 
 
 # Gopher-style hard filter rules (Rae et al. 2021 §A.1.1, adapted to

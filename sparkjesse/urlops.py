@@ -2,18 +2,18 @@
 
 Web-crawl pipelines key almost everything on the URL: canonical form
 for exact URL dedup, the host for spam/SEO-farm caps and per-domain
-mixing quotas. Three operators:
+mixing quotas. Every operator reads the URL through ONE parse,
+``url_cols``: one regex whose semantics are identical in Java (Spark),
+RE2 (DuckDB — the oracle), and PCRE (Spark's ``parse_url`` has
+JVM-only corner semantics). Three operators:
 
-* ``url_components`` — scheme/host/port/path/query per row, extracted
-  with ONE regex whose semantics are identical in Java (Spark), RE2
-  (DuckDB — the oracle), and PCRE. Spark's native ``parse_url`` would
-  also work but has JVM-only corner semantics; a shared regex keeps
-  the oracle bit-for-bit.
-* ``canonical_url`` — lowercased scheme+host, default-port ellision,
-  trailing-slash normalization, query and fragment dropped: the
-  standard exact-URL-dedup key.
+* ``url_components`` — scheme/host/port/path/query per row.
+* ``canonical_url_col`` — lowercased scheme+host, default-port
+  ellision, trailing-slash normalization, query and fragment dropped:
+  the standard exact-URL-dedup key.
 * ``host_cap_filter`` — keep at most ``max_per_host`` docs per host
-  (rank by doc id — deterministic), the classic anti-SEO-farm stage.
+  (rank by doc id — deterministic), the classic anti-SEO-farm stage;
+  it carries its input's columns, so no join back on the id.
 
 Scale: the extractors are pure per-row expressions (scan-speed,
 zero shuffle). ``host_cap_filter`` needs per-host ranks; hosts follow
@@ -40,19 +40,22 @@ URL_RE = (r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#:]+)(?::(\d+))?"
 _DEFAULT_PORTS = {"http": "80", "https": "443", "ftp": "21"}
 
 
+def url_cols(url: Column) -> dict[str, Column]:
+    """The URL parse: ``scheme``, ``host`` (both lowercased), ``port``,
+    ``path`` and ``query`` columns. Unparseable URLs yield empty
+    strings (regexp_extract's no-match value in both engines); port is
+    '' when absent."""
+    def part(i: int) -> Column:
+        return F.regexp_extract(url, URL_RE, i)
+    return {"scheme": F.lower(part(1)), "host": F.lower(part(2)),
+            "port": part(3), "path": part(4), "query": part(5)}
+
+
 def url_components(df: DataFrame, url_col: str = "url",
                    id_col: str = "doc_id") -> DataFrame:
-    """Per-row URL parse: ``(id, scheme, host, port, path, query)``.
-    Unparseable URLs yield empty strings (regexp_extract's no-match
-    value in both engines); port is '' when absent."""
-    u = F.col(url_col)
-    return df.select(
-        F.col(id_col),
-        F.lower(F.regexp_extract(u, URL_RE, 1)).alias("scheme"),
-        F.lower(F.regexp_extract(u, URL_RE, 2)).alias("host"),
-        F.regexp_extract(u, URL_RE, 3).alias("port"),
-        F.regexp_extract(u, URL_RE, 4).alias("path"),
-        F.regexp_extract(u, URL_RE, 5).alias("query"))
+    """``(id, scheme, host, port, path, query)`` per row."""
+    return df.select(F.col(id_col), *[c.alias(n) for n, c in
+                                      url_cols(F.col(url_col)).items()])
 
 
 def canonical_url_col(url: Column) -> Column:
@@ -60,10 +63,8 @@ def canonical_url_col(url: Column) -> Column:
     and host, drop a default port (explicit non-default ports kept),
     drop query/fragment, strip ONE trailing slash from a non-root
     path, normalize an empty path to '/'."""
-    scheme = F.lower(F.regexp_extract(url, URL_RE, 1))
-    host = F.lower(F.regexp_extract(url, URL_RE, 2))
-    port = F.regexp_extract(url, URL_RE, 3)
-    path = F.regexp_extract(url, URL_RE, 4)
+    u = url_cols(url)
+    scheme, port, path = u["scheme"], u["port"], u["path"]
     is_default = port == F.lit("")
     for sch, p in _DEFAULT_PORTS.items():
         is_default = is_default | ((scheme == sch) & (port == p))
@@ -74,7 +75,7 @@ def canonical_url_col(url: Column) -> Column:
                        F.substring(path, 1, F.length(path) - 1)) \
                  .otherwise(path)
     return F.when(scheme == "", F.lit(None).cast("string")) \
-            .otherwise(F.concat(scheme, F.lit("://"), host, portpart,
+            .otherwise(F.concat(scheme, F.lit("://"), u["host"], portpart,
                                 norm_path))
 
 
@@ -91,9 +92,11 @@ def host_cap_filter(df: DataFrame, url_col: str = "url",
                     id_col: str = "doc_id", *,
                     max_per_host: int = 100,
                     broadcast_counts: bool = True) -> DataFrame:
-    """Keep at most ``max_per_host`` docs per host: ``(id, host,
-    host_docs, keep)`` with the keepers chosen by ascending doc id
-    (deterministic in any engine).
+    """Keep at most ``max_per_host`` docs per host: the input's
+    columns plus ``host`` (from :func:`url_cols`), ``host_docs`` and
+    ``keep``, with the keepers chosen by ascending doc id
+    (deterministic in any engine). Rows whose host is NULL (NULL URL)
+    match no host count and are not returned.
 
     Skew-aware by construction — hosts follow a power law, and a rank
     window over raw rows would put the hottest host's 10^9 rows in ONE
@@ -115,9 +118,7 @@ def host_cap_filter(df: DataFrame, url_col: str = "url",
     ``broadcast_counts=False`` to let it run as a shuffle hash join —
     AQE skew-splits the hot hosts, and it is the plan's ONE corpus
     exchange."""
-    hosts = df.select(F.col(id_col),
-                      F.lower(F.regexp_extract(F.col(url_col), URL_RE, 2))
-                      .alias("host"))
+    hosts = df.withColumn("host", url_cols(F.col(url_col))["host"])
     counts = hosts.groupBy("host").agg(
         F.count(F.lit(1)).alias("host_docs"))
     over = counts.where(F.col("host_docs") > max_per_host)
@@ -134,7 +135,7 @@ def host_cap_filter(df: DataFrame, url_col: str = "url",
     cside = F.broadcast(counts) if broadcast_counts else counts
     return (hosts.join(cside, "host")
                  .join(F.broadcast(keepers), "host", "left")
-                 .select(F.col(id_col), F.col("host"), F.col("host_docs"),
+                 .select(*hosts.columns, F.col("host_docs"),
                          ((F.col("host_docs") <= max_per_host)
                           | F.coalesce(F.array_contains(F.col("keep_ids"),
                                                         F.col(id_col)),

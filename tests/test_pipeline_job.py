@@ -10,9 +10,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+TOOLS = os.path.abspath(os.path.join(__file__, "../../tools"))
+
 
 def test_pipeline_job_end_to_end(spark, tmp_path, monkeypatch):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -52,10 +54,57 @@ def test_pipeline_job_end_to_end(spark, tmp_path, monkeypatch):
     assert ids == list(range(len(ids)))
 
 
+def test_pipeline_job_duplicate_ids_keep_own_encoding(
+        spark, tmp_path, monkeypatch):
+    """Two docs that share a doc_id but differ in text come out as two
+    rows, each carrying the token ids of its own text, and the funnel
+    stays monotone: the encoding rides on the row, never re-attached
+    by a join on the id (which pairs every text with every encoding of
+    that id)."""
+    sys.path.insert(0, TOOLS)
+    import pipeline_job
+    from sparkjesse import textops
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    keep_c, _ = textops.quality_cols()
+    # the two smallest ids the quality filter keeps: no smaller doc can
+    # be an exact copy, and the shared id is its near-dup cluster's
+    # canonical id, so both rows survive every dedup stage
+    x, y = [r["doc_id"] for r in docs.where(keep_c).select("doc_id")
+            .orderBy("doc_id").limit(2).collect()]
+    (docs.withColumn("doc_id", F.when(F.col("doc_id") == y, F.lit(x))
+                     .otherwise(F.col("doc_id")))
+         .write.parquet(src))
+
+    monkeypatch.setattr(sys, "argv", [
+        "pipeline_job.py", "--input", src, "--output", out,
+        "--vocab-size", "4096", "--partitions", "4", "--no-redact",
+    ])
+    pipeline_job.main()
+    with open(out + "_stats.json", encoding="utf-8") as fh:
+        stats = json.load(fh)
+    order = ["input", "after_filter", "after_exact_dedup",
+             "after_near_dedup", "written"]
+    vals = [stats[k] for k in order]
+    assert vals == sorted(vals, reverse=True), stats
+
+    texts = {r["doc_id"]: r["text"] for r in
+             docs.where(F.col("doc_id").isin(x, y)).collect()}
+    vocab = {r["token"]: r["token_id"] for r in
+             spark.read.parquet(out + "/vocab").collect()}
+    rows = spark.read.parquet(out + "/docs") \
+        .where(F.col("doc_id") == x).collect()
+    assert sorted(r["text"] for r in rows) == sorted(texts.values())
+    for r in rows:
+        assert r["ids"] == [vocab.get(t, -1) for t in r["text"].split(" ")]
+
+
 def test_pipeline_job_host_cap_and_redaction(spark, tmp_path, monkeypatch):
     """--url-col adds the host-cap stage; PII injected into two docs is
     redacted in the written output and counted in the stats ledger."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     src = str(tmp_path / "src")
@@ -88,7 +137,7 @@ def test_pipeline_job_host_cap_and_redaction(spark, tmp_path, monkeypatch):
 def test_pipeline_job_epoch_order(spark, tmp_path, monkeypatch):
     """--order epoch:N writes the corpus in the deterministic per-epoch
     training order: shard files concatenate to a rank-sorted stream."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -125,7 +174,7 @@ def test_pipeline_job_epoch_order(spark, tmp_path, monkeypatch):
 def test_pipeline_job_span_dedup_stage(spark, tmp_path, monkeypatch):
     """--span-dedup N strips repeated N-token spans after whole-doc
     dedup; the removal count lands in stats and the funnel holds."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     src = str(tmp_path / "src")
@@ -158,7 +207,7 @@ def test_pipeline_job_span_dedup_stage(spark, tmp_path, monkeypatch):
 def test_pipeline_job_lm_cut_stage(spark, tmp_path, monkeypatch):
     """--lm-keep Q trains a corpus LM and drops the worst-perplexity
     tail; the funnel shrinks and the cut value lands in stats."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -181,7 +230,7 @@ def test_pipeline_job_lm_cut_stage(spark, tmp_path, monkeypatch):
 def test_pipeline_job_bpe_stage(spark, tmp_path, monkeypatch):
     """--bpe N trains the tokenizer on the pipeline output corpus,
     attaches bpe_ids alongside the vocab ids, and persists merges."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     out = str(tmp_path / "out")
@@ -208,7 +257,7 @@ def test_pipeline_job_selection_stages(spark, tmp_path, monkeypatch):
     (no false negatives), DSIR shrinks the corpus to ~the requested
     fraction, and SemDeDup prunes embedding near-dups when the input
     carries an embedding column."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     src = str(tmp_path / "src")
@@ -264,8 +313,7 @@ def test_pipeline_job_requested_stage_fails_loudly(
     """A requested selection stage that cannot run stops the job with a
     usage error before anything is written — it is never skipped
     silently."""
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..",
-                                    "tools"))
+    sys.path.insert(0, TOOLS)
     import pipeline_job
 
     tgt = str(tmp_path / "tgt")

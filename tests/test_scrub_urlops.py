@@ -8,16 +8,21 @@ Covers:
 * URL component extraction / canonicalization corner cases,
 * host_cap_filter keep semantics (== rank-by-id ≤ cap) and its plan
   (no window over raw rows — the bounded two-stage min-k instead),
-* zero-shuffle plan shape for the per-row scrub/url extractors.
+* zero-shuffle, join-free plan shape for the per-row scrub/url
+  extractors and the column forms behind them, and for the oracle
+  rows built from them.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
-from sparkjesse.scrub import pii_signals, redact_pii
+from sparkjesse.scrub import pii_cols, pii_signals, redact_pii
+from sparkjesse.textops import encode_col
 from sparkjesse.urlops import (canonical_urls, host_cap_filter,
-                               url_components)
+                               url_cols, url_components)
 
 
 def test_pii_signals_and_redact_sequential_overlap(spark):
@@ -49,12 +54,43 @@ def test_pii_signals_and_redact_sequential_overlap(spark):
 
 
 def test_scrub_plan_is_shuffle_free(spark):
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    for op in (pii_signals, redact_pii, url_components, canonical_urls):
-        plan = op(df.withColumnRenamed("text", "url")
-                  if op in (url_components, canonical_urls) else df) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, (op.__name__, plan)
+    df = spark.createDataFrame([(1, "x", "https://h/p")],
+                               "doc_id long, text string, url string")
+    vocab = spark.createDataFrame([("x", 0)], "token string, token_id long")
+    frames = {
+        "pii_signals": pii_signals(df), "redact_pii": redact_pii(df),
+        "url_components": url_components(df),
+        "canonical_urls": canonical_urls(df),
+        "pii_cols": df.select(*[c.alias(n) for n, c in
+                                pii_cols(F.col("text")).items()]),
+        "url_cols": df.select(*[c.alias(n) for n, c in
+                                url_cols(F.col("url")).items()]),
+        "encode_col": df.withColumn("enc", encode_col(vocab)),
+    }
+    for name, frame in frames.items():
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, (name, plan)
+        assert "Join" not in plan, (name, plan)
+
+
+def test_entry_result_shapes_join_only_on_host(spark, sf_dir):
+    """The txt_redact oracle row is one select (no join at all), and
+    web_hostcap's only joins are host_cap_filter's host-keyed
+    aggregates: nothing re-joins per-row results on doc_id."""
+    import __spark_entry__ as entrymod
+    qs = entrymod.queries()
+
+    def plan(name):
+        return qs[name](spark, sf_dir)._jdf.queryExecution() \
+            .executedPlan().toString()
+
+    assert "Join" not in plan("txt_redact")
+    keys = re.findall(r"Join \[([^\]]*)\], \[([^\]]*)\]",
+                      plan("web_hostcap"))
+    assert keys
+    for left, right in keys:
+        assert re.fullmatch(r"host#\d+", left), (left, right)
+        assert re.fullmatch(r"host#\d+", right), (left, right)
 
 
 def test_url_components_and_canonical(spark):
@@ -94,6 +130,7 @@ def test_host_cap_filter_keep_matches_rank(spark):
            host_cap_filter(df, max_per_host=5).collect()}
     assert len(out) == 15
     for i in range(15):
+        assert out[i]["url"] == rows[i][1]  # input columns carried
         if i < 12:
             assert out[i]["host"] == "h0.ex.com"
             assert out[i]["host_docs"] == 12

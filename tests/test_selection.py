@@ -28,8 +28,8 @@ def embs(spark, sf_dir):
 # DSIR
 # ---------------------------------------------------------------------------
 
-def _local_grams(text: str, include_uni: bool = True) -> list[str]:
-    toks = (text or "").split(" ")
+def _local_grams(text: str | None, include_uni: bool = True) -> list[str]:
+    toks = [] if text is None else text.split(" ")
     grams = list(toks) if include_uni else []
     grams += [f"{a} {b}" for a, b in zip(toks, toks[1:])]
     return grams
@@ -139,13 +139,13 @@ def test_bucket_counts_impls_agree(spark, docs):
 def test_hashed_grams_edge_docs(spark):
     # single-token and empty docs: no bigrams, never a crash (a
     # descending sequence(1, 0) once made element_at throw here);
-    # both the expression path and both bucket_counts impls agree
-    # with the local hashlib twin
+    # NULL text has no grams at all; both the expression path and
+    # both bucket_counts impls agree with the local hashlib twin
     n_buckets = 64
     df = spark.createDataFrame(
-        [("a", "solo"), ("b", ""), ("c", "two words")],
+        [("a", "solo"), ("b", ""), ("c", "two words"), ("d", None)],
         "doc_id string, text string")
-    got = {r["doc_id"]: list(r["bk"]) for r in df.select(
+    got = {r["doc_id"]: list(r["bk"] or []) for r in df.select(
         "doc_id",
         sel.hashed_grams_col("text", n_buckets=n_buckets).alias("bk"))
         .collect()}
@@ -162,6 +162,11 @@ def test_hashed_grams_edge_docs(spark):
             for b in bks:
                 flat[b] = flat.get(b, 0) + 1
         assert hist == flat, impl
+    # the DSIR kernel scores NULL text as zero grams, not one '' gram
+    model = sel.dsir_model(df, df, n_buckets=n_buckets)
+    null_row = sel.dsir_weights(df, model).where("doc_id = 'd'").collect()
+    assert [(r["n_grams"], r["tgt_hits"], r["weight"]) for r in null_row] \
+        == [(0, 0, 0.0)]
 
 
 def test_hashed_grams_spark_expression_matches_python_hash(spark, docs):

@@ -101,7 +101,7 @@ def test_stateful_key_budget_accumulates_across_batches(spark, tmp_path):
         [("d1", 9, "src0"), ("d2", 9, "src0"), ("d3", 9, "src1"),
          ("d4", 1, "src1")],
         "doc_id string, n long, source string") \
-        .write.mode("overwrite").parquet(src)
+        .coalesce(1).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(
         "doc_id string, n long, source string").parquet(src)
     annotated = streaming.validate_stream(ValidationEngine(), stream,
@@ -114,11 +114,13 @@ def test_stateful_key_budget_accumulates_across_batches(spark, tmp_path):
          .start())
     try:
         _drain(q)
-        # batch 2: two more src0 failures -> crosses budget=2
+        # batch 2: two more src0 failures -> crosses budget=2; one
+        # file per batch, so the stream can never pick up a half-
+        # committed append as two micro-batches
         spark.createDataFrame(
             [("d5", 9, "src0"), ("d6", 9, "src0"), ("d7", 2, "src1")],
             "doc_id string, n long, source string") \
-            .write.mode("append").parquet(src)
+            .coalesce(1).write.mode("append").parquet(src)
         _drain(q)
         rows = spark.sql(
             "SELECT * FROM budget_t ORDER BY key, total_fail").collect()

@@ -9,9 +9,10 @@ values (columns sorted by name, like the driver). Usage:
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 import duckdb  # noqa: E402
 

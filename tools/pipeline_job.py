@@ -16,7 +16,7 @@ The standard LLM data-prep chain, every stage a sparkjesse operator:
      banding + ``duplicate_clusters`` canonical-keep);
   4.5. (opt-in, ``--span-dedup N``) substring-level dedup
      (``dedup.remove_duplicate_spans``) — repeated N-token spans are
-     removed keeping one canonical copy, then lineage is checkpointed;
+     removed keeping one canonical copy;
   5. benchmark decontamination when ``--benchmark`` is given: exact
      broadcast n-gram overlap (``dedup.decontaminate_report``) or,
      with ``--decontaminate-mode bloom``, a fixed-memory Bloom-bitmap
@@ -33,12 +33,13 @@ The standard LLM data-prep chain, every stage a sparkjesse operator:
      (``selection.semantic_dedup`` over a
      ``similarity.kmeans_codebook``); the input must carry an
      ``embedding`` column;
-  6. PII redaction (``scrub.redact_pii``) with an aggregate redaction
-     count in the stats ledger — after dedup (identical PII spans must
-     not be hidden from the dedup keys), before anything is written;
-  7. vocabulary build + token-id encoding (``textops.build_vocab`` /
-     ``encode_documents``);
-  8. range-sorted parquet output (``sources.write_range_sorted``) so
+  6. in-place PII redaction (``scrub.redact_cols``), counted in the
+     stats ledger — after dedup (identical PII spans must not be
+     hidden from the dedup keys), before anything is written;
+  7. vocabulary build + encoding column (``textops.build_vocab`` /
+     ``encode_col``);
+  8. ``ids``/``n_oov`` attached to each row in place, then
+     range-sorted parquet output (``sources.write_range_sorted``) so
      downstream consumers get zone-map-prunable, merge-ready files.
 
 A requested stage that cannot run (``--dsir-keep`` without
@@ -50,14 +51,14 @@ applies the host-cap filter (``urlops.host_cap_filter`` — anti-SEO-farm
 cap, bounded two-stage min-k) before quality filtering.
 
 Shuffle ledger for the whole job: sample, quality filter (verdict
-columns via ``textops.quality_cols``) and the LM cut (score column
-via ``textops.lm_score_col``) are pure maps over the corpus — no join
-back, no exchange; the host-cap survivors stream through a BROADCAST
-left-anti join against the small over-cap drop set; exact dedup
-shuffles once on doc-sized rows; SimHash pair-finding shuffles
-fingerprint bands (bands × 8 B per doc), never text; decontamination
-broadcasts the benchmark side. Nothing shuffles the corpus twice in a
-row on different keys.
+columns via ``textops.quality_cols``), the LM cut (score column via
+``textops.lm_score_col``), redaction and encoding are pure maps over
+the corpus — no join back, no exchange; the host-cap survivors
+stream through a BROADCAST left-anti join against the small over-cap
+drop set; exact dedup shuffles once on doc-sized rows; SimHash
+pair-finding shuffles fingerprint bands (bands × 8 B per doc), never
+text; decontamination broadcasts the benchmark side. Nothing shuffles
+the corpus twice in a row on different keys.
 """
 
 from __future__ import annotations
@@ -194,12 +195,7 @@ def main() -> None:
             docs, span_tokens=args.span_dedup)
         stats["span_tokens_removed"] = int(docs.agg(
             F.sum("n_tokens_removed")).collect()[0][0] or 0)
-        # truncate lineage: downstream encode_documents self-joins the
-        # corpus, and carrying the rebuilt-text expression tree into
-        # that join re-plans the pandas UDF into an interpreted
-        # projection (unevaluable). At production scale this stage
-        # boundary is a storage write anyway.
-        docs = docs.drop("n_tokens_removed").localCheckpoint(eager=False)
+        docs = docs.drop("n_tokens_removed")
 
     # 5. decontamination against the benchmark/eval set: exact
     # broadcast n-gram overlap, or (for benchmark suites too large to
@@ -286,7 +282,7 @@ def main() -> None:
     vocab = textops.build_vocab(docs, min_count=2,
                                 max_size=args.vocab_size)
     vocab.write.mode("overwrite").parquet(f"{args.output}/vocab")
-    encoded = textops.encode_documents(docs, vocab)
+    enc = textops.encode_col(vocab)
 
     # 7.5 (opt-in) BPE tokenizer: train on the final corpus, attach
     # subword ids column-preserving (zero shuffle), persist the merges
@@ -303,7 +299,10 @@ def main() -> None:
     # 8. final write: analytics order (range-sorted by doc_id, zone-map
     # prunable) or training order (deterministic per-epoch shuffle —
     # shard files concatenate to the exact global pseudorandom order)
-    final = docs.join(encoded, "doc_id")
+    # the encoding rides on each row as columns: no join back on the
+    # id, so every row keeps the ids of its own text
+    final = docs.withColumns({"ids": enc.getField("ids"),
+                              "n_oov": enc.getField("n_oov")})
     if args.order.startswith("epoch"):
         epoch = int(args.order.split(":")[1]) if ":" in args.order else 0
         (sampling.epoch_shuffle(final, "doc_id", epoch=epoch,
